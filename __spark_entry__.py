@@ -112,31 +112,20 @@ def _log_hi(spark: SparkSession, sf_dir: str) -> int:
     """max(lsn) of the event-derived change logs WITHOUT a Spark job:
     every derivation in this file sets ``lsn = event_id`` verbatim, so
     the events parquet footer's event_id max IS max(lsn) — a driver-side
-    metadata read replacing a full-scan aggregate per query. Falls back
-    to the aggregate when a footer lacks stats."""
+    metadata read replacing a full-scan aggregate per query (the
+    table's own footer-stats code). Falls back to the aggregate when
+    some file's footer lacks event_id stats."""
     import glob as _glob
 
-    import pyarrow.parquet as _pq
+    from neosync_spark.lakehouse import SnapshotTable
 
     path = os.path.join(sf_dir, "events.parquet")
     files = [path] if os.path.isfile(path) else sorted(
         _glob.glob(os.path.join(path, "*.parquet"))
     )
-    mx = None
-    try:
-        for f in files:
-            md = _pq.ParquetFile(f).metadata
-            idx = {md.schema.column(i).name: i for i in range(md.num_columns)}
-            ci = idx["event_id"]
-            for rg in range(md.num_row_groups):
-                st = md.row_group(rg).column(ci).statistics
-                if st is None or not st.has_min_max:
-                    raise ValueError("footer lacks event_id stats")
-                mx = st.max if mx is None else max(mx, st.max)
-    except Exception:
-        mx = None
-    if mx is not None:
-        return int(mx)
+    stats = SnapshotTable._collect_file_stats({0: files}, ["event_id"])
+    if files and len(stats) == len(files):
+        return int(max(s["event_id"][1] for s in stats.values()))
     return int(
         _derived_log(spark, sf_dir).agg(F.max("lsn")).collect()[0][0] or 0
     )

@@ -29,9 +29,9 @@ Design:
 - hashing is double-hashing (Kirsch–Mitzenmacher) off two md5 digests
   of the *normalized string* value — pure Python on both the build
   (pandas) and probe (driver) sides, so no JVM-hash parity is needed.
-- files without a bloom entry are simply never pruned: compaction or
-  purge rewrites that skip bloom building degrade pruning, never
-  correctness.
+- every writer of data files builds one (``SnapshotTable._file_entries``);
+  a file without a bloom entry is simply never pruned, which degrades
+  pruning, never correctness.
 
 Reference analog: the reference engine has no table-side file skipping
 at all (its reads are SQL pushed to the source database, e.g. keyset

@@ -70,13 +70,6 @@ class EngineConfig:
     # parent key set are quarantined to <table>/metadata/quarantine_fk
     # and counted; the rest of the batch applies normally
     fk_check: "FkCheck | None" = None
-    # narrow in-batch LWW + broadcast winner semi-join: payload crosses
-    # the wire once instead of once per duplicate event (see merge_cdc
-    # late_materialize for the wire math). Right when batches carry
-    # high per-key duplicate multiplicity and the per-batch DISTINCT
-    # key count fits a broadcast (~10^7); keep False for d ≈ 1 sources
-    # or giant-key-count bulk loads.
-    late_materialize: bool = False
     # partial row images: op='patch' sets only non-NULL columns (see
     # merge_cdc patch_ops — COW folds at write, MoR stores raw + folds
     # at read); requires the source slices to be raw event history
@@ -432,7 +425,6 @@ class ReplayEngine:
             chain_state=chaining,
             patch_ops=self.config.patch_ops,
             bucket_local_merge=self.config.bucket_local_merge,
-            late_materialize=self.config.late_materialize,
             on_conflict=self.config.on_conflict,
         )
         if chaining:

@@ -300,6 +300,16 @@ def _min_tv(entries) -> int:
     return min((int(e.get("tv", 0)) for e in entries), default=0)
 
 
+def _bucket_rows(entries: dict[str, list[dict]]) -> dict[int, int]:
+    """Rows per bucket from new file entries' footer counts — lineage
+    rows_applied when no pre-pass counted the source per bucket."""
+    return {
+        int(b): sum(e["rows"] for e in ents)
+        for b, ents in entries.items()
+        if ents
+    }
+
+
 @dataclass
 class CommitInfo:
     snapshot_id: int
@@ -365,8 +375,10 @@ class SnapshotTable:
     ) -> "SnapshotTable":
         """Create an empty table at snapshot 0.
 
-        ``bloom_cols`` opts into per-file bloom sidecars built at every
-        commit for those columns (see ``bloom.py``); point lookups via
+        ``bloom_cols`` opts into per-file bloom sidecars for those
+        columns (see ``bloom.py``), built for every data file a commit
+        writes — merges, compaction, purge, rescale, repair and
+        retention rewrites alike; point lookups via
         ``read(key_equals=...)`` then skip files that definitely don't
         contain the key — the Iceberg-puffin / Delta-bloom-index analog."""
         os.makedirs(os.path.join(path, "metadata"), exist_ok=True)
@@ -1472,7 +1484,6 @@ class SnapshotTable:
         debug_assert_unique: bool = False,
         patch_ops: bool = False,
         bucket_local_merge: bool = False,
-        late_materialize: bool = False,
         on_conflict: str = "fail",
         _retry_budget: int = 2,
     ) -> CommitInfo:
@@ -1537,26 +1548,6 @@ class SnapshotTable:
         before the wire and hot buckets would serialize into single
         partitions. Final state is identical either way (tests assert
         it).
-
-        ``late_materialize=True`` (raw sources, full images only) runs
-        the in-batch LWW over NARROW rows — (key, ts, lsn) — and
-        re-fetches winning payloads from the source scan via a
-        broadcast winner semi-join, instead of pushing every event's
-        full payload through the dedup shuffle. Wire math: with
-        duplicate multiplicity d (events per key per batch) and payload
-        width w >> key width k, the dedup exchange shrinks from
-        O(d·keys·w) to O(d·keys·k) and the payload crosses the network
-        once (keys·w in the merge exchange) instead of d times; the
-        source is scanned twice (columnar scans are the cheap part —
-        and the second scan prunes to key+payload columns). The winner
-        set (one (key, lsn) row per key) must fit in a broadcast, so
-        this is for micro/mini-batches up to ~10^7 DISTINCT keys per
-        commit — at bigger batch key-counts, or d ≈ 1 (no duplication
-        to elide), keep the default single-pass fold. Joining on
-        key+lsn (not lsn alone) keeps it correct even if lsn values
-        repeat across keys; exact-duplicate redeliveries of the winner
-        survive the semi-join and collapse in the (now tiny) merge
-        fold, same as the default path.
 
         ``source_is_raw=True`` is the engine fast path: the batch may
         hold many events per key and is not yet anonymized — the stats
@@ -1627,10 +1618,6 @@ class SnapshotTable:
         persisted = not source_is_raw
         if persisted:
             src = src.persist()
-        # pre-observe handle: the late-materialize winner build runs as
-        # its own (broadcast) job and must not re-fire the observe()
-        # metric the write job owns
-        src_plain = src
         observation = None
         try:
             if prune_buckets:
@@ -1656,22 +1643,6 @@ class SnapshotTable:
                 n_src = None
 
             s_side = self._source_side(src, cur, patch_ops=patch_ops)
-
-            if late_materialize and source_is_raw and not patch_ops:
-                # narrow in-batch LWW: only (key, ts, lsn) crosses the
-                # dedup exchange; winning payloads are re-fetched from
-                # a second (column-pruned) source scan by broadcast
-                # semi-join on key+lsn. See the docstring for the wire
-                # math and the key-count bound.
-                narrow = src_plain.select(
-                    *key_cols, "ts", F.col("lsn").cast("long").alias(_LSN_COL)
-                )
-                winners = lww_dedup(narrow, key_cols, ["ts", _LSN_COL])
-                s_side = s_side.join(
-                    F.broadcast(winners.select(*key_cols, _LSN_COL)),
-                    on=[*key_cols, _LSN_COL],
-                    how="left_semi",
-                )
 
             if mode == "mor":
                 # delta write: LWW deferred to read/compact; raw batches
@@ -1818,9 +1789,13 @@ class SnapshotTable:
             out.write.partitionBy(_BUCKET_COL).parquet(commit_dir)
 
             written = self._list_commit_files(commit_dir)
-            footers = self._read_footers(written, self.spark)
-            fstats = self._collect_file_stats(
-                written, self._stats_cols(m), footers
+            # own_entries / replaced_paths drive BOTH the normal manifest
+            # build and a conflict rebase (_rebase_manifest). Fresh data
+            # is written by the CURRENT anonymization policy (the
+            # engine's transforms run inside this merge).
+            own_entries = self._file_entries(
+                m, new_sid, written, int(m.get("transform_version", 0)),
+                kind="delta" if mode == "mor" else None,
             )
             if affected is None:  # no-prepass mode: stats post-hoc
                 affected = sorted(written)
@@ -1828,42 +1803,15 @@ class SnapshotTable:
                 # metric unavailable (cloned foreachBatch session):
                 # recompute over the micro-batch source
                 n_src = int(got["n_src"]) if got else src.count()
-                bucket_counts = self._footer_counts(written, footers)
-            bmap = self._annotate_blooms(m, new_sid, written)
-            patch_paths = self._patch_paths(footers)
-            rmap = self._row_count_entries(written, footers)
-
-            def _fentry(p: str, kind: str | None = None) -> dict:
-                e = {"path": p, "schema_id": m["schema_id"], **rmap.get(p, {})}
-                # fresh data is written by the CURRENT anonymization
-                # policy (the engine's transforms run inside this merge)
-                if int(m.get("transform_version", 0)):
-                    e["tv"] = int(m["transform_version"])
-                if kind:
-                    e["kind"] = kind
-                if p in fstats:
-                    e["stats"] = fstats[p]
-                if p in bmap:
-                    e["bloom"] = bmap[p]
-                if p in patch_paths:
-                    e["patches"] = True
-                return e
-
-            # own_entries / replaced_paths drive BOTH the normal manifest
-            # build and a conflict rebase (_rebase_manifest)
-            own_entries: dict[str, list[dict]] = {}
+                bucket_counts = _bucket_rows(own_entries)
             replaced: dict[str, set[str]] | None = None
-            if mode == "mor":
-                for b, paths in written.items():
-                    own_entries[str(b)] = [_fentry(p, "delta") for p in sorted(paths)]
-            else:
+            if mode != "mor":
                 rewritten = affected if prune_buckets else [
                     int(b) for b in m["files"]
                 ]
-                for b in rewritten:
-                    own_entries[str(b)] = []
-                for b, paths in written.items():
-                    own_entries[str(b)] = [_fentry(p) for p in sorted(paths)]
+                own_entries = {
+                    **{str(b): [] for b in rewritten}, **own_entries
+                }
                 replaced = {
                     str(b): {e["path"] for e in m["files"].get(str(b), [])}
                     for b in rewritten
@@ -1933,7 +1881,6 @@ class SnapshotTable:
                     debug_assert_unique=debug_assert_unique,
                     patch_ops=patch_ops,
                     bucket_local_merge=bucket_local_merge,
-                    late_materialize=late_materialize,
                     on_conflict="retry",
                     _retry_budget=_retry_budget - 1,
                 )
@@ -2099,26 +2046,13 @@ class SnapshotTable:
             )
         new_sid = self._next_snapshot_id()
         new_files = {b: list(v) for b, v in m["files"].items()}
-        footers = self._read_footers(written, self.spark)
-        fstats = self._collect_file_stats(written, self._stats_cols(m), footers)
         # bloom build launches one Spark job inside the serialized
         # metadata step; with pipelined commits prefer building it in
         # the data plane if it ever dominates — gated on bloom_cols
-        bmap = self._annotate_blooms(m, new_sid, written)
-        patch_paths = self._patch_paths(footers)
-        rmap = self._row_count_entries(written, footers)
-        own_entries: dict[str, list[dict]] = {}
-        for b, paths in written.items():
-            own_entries[str(b)] = [
-                {"path": p, "schema_id": schema_id, "kind": "delta",
-                 **rmap.get(p, {}),
-                 **({"tv": int(m["transform_version"])}
-                    if int(m.get("transform_version", 0)) else {}),
-                 **({"stats": fstats[p]} if p in fstats else {}),
-                 **({"bloom": bmap[p]} if p in bmap else {}),
-                 **({"patches": True} if p in patch_paths else {})}
-                for p in sorted(paths)
-            ]
+        own_entries = self._file_entries(
+            m, new_sid, written, int(m.get("transform_version", 0)),
+            kind="delta",
+        )
         for b, ents in own_entries.items():
             new_files.setdefault(b, []).extend(ents)
         ledger = list(m["checkpoint"]["applied"])
@@ -2151,8 +2085,7 @@ class SnapshotTable:
             return CommitInfo(committed["snapshot_id"], 0, 0, applied_range)
         if lineage:
             self._write_lineage(
-                self._footer_counts(written, footers),
-                committed["snapshot_id"],
+                _bucket_rows(own_entries), committed["snapshot_id"],
                 applied_range,
             )
         return CommitInfo(
@@ -2163,18 +2096,6 @@ class SnapshotTable:
         return m.get(
             "stats_cols", [m["key_cols"][0], *m.get("order_cols", []), _LSN_COL]
         )
-
-    @staticmethod
-    def _patch_paths(footers: dict[str, object]) -> set[str]:
-        """Data files carrying the partial-image marker column (raw MoR
-        patch deltas) — flagged in the manifest so read() knows to fold
-        with patch semantics and stats pruning stays conservative."""
-        out = set()
-        for p, md in footers.items():
-            names = {md.schema.column(i).name for i in range(md.num_columns)}
-            if _PATCH_COL in names:
-                out.add(p)
-        return out
 
     @staticmethod
     def _norm_stat(v):
@@ -2195,45 +2116,118 @@ class SnapshotTable:
         return v
 
     @classmethod
+    def _footer_fields(cls, md, cols: list[str]) -> dict:
+        """The manifest-entry fields one parquet footer proves, in one
+        pass over it (driver-side, no job):
+
+        - ``rows``: the Iceberg ``record_count`` analog;
+        - ``live_rows`` (rows whose tombstone flag is false), only when
+          every row group's ``_deleted`` boolean stats are homogeneous
+          (all-false -> all live, all-true -> zero live; parquet
+          booleans carry min/max only, so a mixed row group is
+          unprovable and the file stays unlabeled — ``metadata_count``
+          then scans just that file's tombstone column). Delete-free
+          files — the overwhelming majority of a bulk-loaded or
+          tombstone-expired table — always label;
+        - ``stats``: per-column [min, max] of ``cols`` (the Iceberg
+          manifest-stats analog); a column without stats in some row
+          group is omitted (read keeps the file);
+        - ``patches``: the file carries the partial-image marker column
+          (a raw MoR patch delta), so read() folds with patch semantics
+          and stats pruning stays conservative."""
+        idx = {md.schema.column(i).name: i for i in range(md.num_columns)}
+        groups = [md.row_group(rg) for rg in range(md.num_row_groups)]
+
+        def _rg_stats(col: str) -> list | None:
+            sts = [g.column(idx[col]).statistics for g in groups]
+            if any(st is None or not st.has_min_max for st in sts):
+                return None
+            return sts
+
+        out: dict = {"rows": md.num_rows}
+        dels = _rg_stats(_DELETED_COL) if _DELETED_COL in idx else None
+        if dels is not None and all(
+            not st.null_count and (st.max is False or st.min is True)
+            for st in dels
+        ):
+            out["live_rows"] = sum(
+                g.num_rows for g, st in zip(groups, dels) if st.max is False
+            )
+        stats: dict[str, list] = {}
+        for col in cols:
+            sts = _rg_stats(col) if col in idx else None
+            if sts:
+                stats[col] = [
+                    cls._norm_stat(min(st.min for st in sts)),
+                    cls._norm_stat(max(st.max for st in sts)),
+                ]
+        if stats:
+            out["stats"] = stats
+        if _PATCH_COL in idx:
+            out["patches"] = True
+        return out
+
+    @classmethod
     def _collect_file_stats(
         cls,
         written: dict[int, list[str]],
         cols: list[str],
         footers: dict[str, object] | None = None,
     ) -> dict[str, dict]:
-        """Per-file column min/max from parquet footers (driver-side,
-        no job — the Iceberg manifest-stats analog). Files whose footer
-        lacks stats for a column simply omit it (read keeps them)."""
+        """path → column [min, max] from parquet footers (see
+        ``_footer_fields``); files with no stats for any of ``cols``
+        are left out."""
         if footers is None:
             footers = cls._read_footers(written)
-
         out: dict[str, dict] = {}
         for paths in written.values():
             for p in paths:
-                md = footers[p]
-                idx = {
-                    md.schema.column(i).name: i for i in range(md.num_columns)
-                }
-                colstats: dict[str, list] = {}
-                for col in cols:
-                    if col not in idx:
-                        continue
-                    mins, maxs = [], []
-                    ok = True
-                    for rg in range(md.num_row_groups):
-                        st = md.row_group(rg).column(idx[col]).statistics
-                        if st is None or not st.has_min_max:
-                            ok = False
-                            break
-                        mins.append(st.min)
-                        maxs.append(st.max)
-                    if ok and mins:
-                        colstats[col] = [
-                            cls._norm_stat(min(mins)),
-                            cls._norm_stat(max(maxs)),
-                        ]
-                if colstats:
-                    out[p] = colstats
+                stats = cls._footer_fields(footers[p], cols).get("stats")
+                if stats:
+                    out[p] = stats
+        return out
+
+    def _file_entries(
+        self,
+        m: dict,
+        new_sid: int,
+        written: dict[int, list[str]],
+        tv: "int | dict[str, list[dict]]",
+        kind: str | None = None,
+        schema_id: int | None = None,
+        stats_cols: list[str] | None = None,
+    ) -> dict[str, list[dict]]:
+        """Manifest entries for a commit's freshly written data files,
+        bucket(str) → entries in path order. Every writer builds its
+        entries here: each footer is read once (``_read_footers``) and
+        yields rows / live_rows / stats / patches (``_footer_fields``),
+        and the table's bloom sidecar covers the files
+        (``_annotate_blooms``, named after ``new_sid``).
+
+        ``tv`` is the transform-version floor: an int for every file
+        (data written by that policy), or the entries a rewrite
+        consumed per bucket (``m["files"]``-shaped), whose ``_min_tv``
+        floors that bucket's new files. ``schema_id`` and
+        ``stats_cols`` default to the manifest's."""
+        footers = self._read_footers(written, self.spark)
+        bmap = self._annotate_blooms(m, new_sid, written)
+        cols = stats_cols or self._stats_cols(m)
+        sid = m["schema_id"] if schema_id is None else schema_id
+        out: dict[str, list[dict]] = {}
+        for b, paths in written.items():
+            tv_b = tv if isinstance(tv, int) else _min_tv(tv.get(str(b), []))
+            ents = []
+            for p in sorted(paths):
+                e = {"path": p, "schema_id": sid,
+                     **self._footer_fields(footers[p], cols)}
+                if tv_b:
+                    e["tv"] = tv_b
+                if kind:
+                    e["kind"] = kind
+                if p in bmap:
+                    e["bloom"] = bmap[p]
+                ents.append(e)
+            out[str(b)] = ents
         return out
 
     def _prune_by_stats(
@@ -2363,8 +2357,9 @@ class SnapshotTable:
         files (ONE distributed pass over the batch's files only — never
         the table) and return {data_path: sidecar rel path} for the
         manifest entries. No-op unless the table opted into
-        ``bloom_cols``. Files a rewrite path skips (purge/rescale) just
-        lose pruning, never correctness — probe keeps bloom-less files."""
+        ``bloom_cols``. Every writer builds one through
+        ``_file_entries``; a file the sidecar does not cover only loses
+        pruning, never correctness — the probe keeps bloom-less files."""
         cols = self._current_bloom_cols(m)
         if not cols or not written:
             return {}
@@ -2483,69 +2478,6 @@ class SnapshotTable:
                     out[b] = kept
         kept_n = sum(len(v) for v in out.values())
         return out, total, kept_n
-
-    @staticmethod
-    def _footer_counts(
-        written: dict[int, list[str]],
-        footers: dict[str, object] | None = None,
-    ) -> dict[int, int]:
-        """Rows per bucket from parquet footers (driver-side, no job).
-        In no-prepass mode lineage rows_applied are post-merge bucket
-        row counts (the batch total is exact, from observe())."""
-        if footers is None:
-            footers = SnapshotTable._read_footers(written)
-        return {
-            b: sum(footers[p].num_rows for p in paths)
-            for b, paths in written.items()
-        }
-
-    @staticmethod
-    def _row_count_entries(
-        written: dict[int, list[str]],
-        footers: dict[str, object] | None = None,
-    ) -> dict[str, dict]:
-        """Per-file manifest row counts from parquet footers (the
-        Iceberg ``record_count`` analog): ``{"rows": n[, "live_rows":
-        k]}``. ``live_rows`` (rows whose tombstone flag is false) is
-        recorded only when the footer PROVES it: every row group's
-        ``_deleted`` boolean stats homogeneous (all-false -> all live,
-        all-true -> zero live; parquet booleans carry min/max only, so
-        a mixed row group is unprovable and the file stays unlabeled —
-        ``metadata_count`` then scans just that file's tombstone
-        column). Delete-free files — the overwhelming majority of a
-        bulk-loaded or tombstone-expired table — always label."""
-        if footers is None:
-            footers = SnapshotTable._read_footers(written)
-        out: dict[str, dict] = {}
-        for paths in written.values():
-            for p in paths:
-                md = footers[p]
-                d: dict = {"rows": md.num_rows}
-                idx = {
-                    md.schema.column(i).name: i
-                    for i in range(md.num_columns)
-                }
-                if _DELETED_COL in idx:
-                    live, exact = 0, True
-                    for rg in range(md.num_row_groups):
-                        g = md.row_group(rg)
-                        st = g.column(idx[_DELETED_COL]).statistics
-                        if (
-                            st is None
-                            or not st.has_min_max
-                            or (st.null_count or 0) > 0
-                        ):
-                            exact = False
-                            break
-                        if st.max is False:
-                            live += g.num_rows
-                        elif st.min is not True:
-                            exact = False
-                            break
-                    if exact:
-                        d["live_rows"] = live
-                out[p] = d
-        return out
 
     # commits writing at least this many files read their footers in a
     # Spark job instead of the driver thread pool: a 2^13-bucket bulk
@@ -2829,26 +2761,15 @@ class SnapshotTable:
             # the whole targeted bucket set
             if persisted is not None:
                 persisted.unpersist()
-        written_c = self._list_commit_files(commit_dir)
-        footers_c = self._read_footers(written_c, self.spark)
-        fstats = self._collect_file_stats(written_c, stats_cols, footers_c)
-        bmap = self._annotate_blooms(m, new_sid, written_c)
-        rmap = self._row_count_entries(written_c, footers_c)
-        own_entries: dict[str, list[dict]] = {str(b): [] for b in buckets}
-        for b, paths in written_c.items():
-            tv_b = (
-                int(tag_transform_version)
-                if tag_transform_version is not None
-                else _min_tv(m["files"].get(str(b), []))
-            )
-            own_entries[str(b)] = [
-                {"path": p, "schema_id": m["schema_id"],
-                 **rmap.get(p, {}),
-                 **({"tv": tv_b} if tv_b else {}),
-                 **({"stats": fstats[p]} if p in fstats else {}),
-                 **({"bloom": bmap[p]} if p in bmap else {})}
-                for p in sorted(paths)
-            ]
+        own_entries = {
+            **{str(b): [] for b in buckets},
+            **self._file_entries(
+                m, new_sid, self._list_commit_files(commit_dir),
+                m["files"] if tag_transform_version is None
+                else int(tag_transform_version),
+                stats_cols=stats_cols,
+            ),
+        }
         # the fold consumed every entry of the targeted buckets at this
         # snapshot — a rebase must see them all still live at the head
         replaced = {
@@ -3100,24 +3021,26 @@ class SnapshotTable:
             new_files = {b: list(v) for b, v in m["files"].items()}
             for b in affected:
                 new_files[str(b)] = []  # deltas fold into the rewrite
-            written = self._list_commit_files(commit_dir)
-            footers_p = self._read_footers(written, self.spark)
+            # fresh blooms for the rewritten files: the subjects' keys
+            # are gone from the data, so they're absent from the new
+            # bits too; the old sidecars die with expire_snapshots' GC
+            entries = self._file_entries(
+                m, new_sid, self._list_commit_files(commit_dir), m["files"]
+            )
+            new_files.update(entries)
+            new_files = {b: v for b, v in new_files.items() if v}
             # hardened metric reads: the blocking Observation.get can
             # surface a schema-less metrics row on Spark 4.1 (the same
             # failure class observation_metrics guards against) — fall
-            # back to exact recomputes: kept rows from the freshly
-            # written footers (no job), the before-count from one job
+            # back to exact recomputes: kept rows from the new entries'
+            # footer counts (no job), the before-count from one job
             # over the affected buckets
             got_all = observation_metrics(obs_all)
             got_keep = observation_metrics(obs)
             n_keep = (
                 int(got_keep["n_keep"])
                 if got_keep is not None
-                else sum(
-                    footers_p[p].num_rows
-                    for ps in written.values()
-                    for p in ps
-                )
+                else sum(_bucket_rows(entries).values())
             )
             n_before = (
                 int(got_all["n_before"])
@@ -3125,25 +3048,6 @@ class SnapshotTable:
                 else self.read(buckets=affected, internal=True).count()
             )
             purged_rows = n_before - n_keep
-            fstats = self._collect_file_stats(
-                written, self._stats_cols(m), footers_p
-            )
-            # fresh blooms for the rewritten files: the subjects' keys
-            # are gone from the data, so they're absent from the new
-            # bits too; the old sidecars die with expire_snapshots' GC
-            bmap = self._annotate_blooms(m, new_sid, written)
-            rmap = self._row_count_entries(written, footers_p)
-            for b, paths in written.items():
-                tv_b = _min_tv(m["files"].get(str(b), []))
-                new_files[str(b)] = [
-                    {"path": p, "schema_id": m["schema_id"],
-                     **rmap.get(p, {}),
-                     **({"tv": tv_b} if tv_b else {}),
-                     **({"stats": fstats[p]} if p in fstats else {}),
-                     **({"bloom": bmap[p]} if p in bmap else {})}
-                    for p in sorted(paths)
-                ]
-            new_files = {b: v for b, v in new_files.items() if v}
             new_m = {
                 **m,
                 "snapshot_id": new_sid,
@@ -3244,25 +3148,12 @@ class SnapshotTable:
         if max_records_per_file:
             writer = writer.option("maxRecordsPerFile", int(max_records_per_file))
         writer.partitionBy(_BUCKET_COL).parquet(commit_dir)
-        written = self._list_commit_files(commit_dir)
-        footers_r = self._read_footers(written, self.spark)
-        fstats = self._collect_file_stats(written, self._stats_cols(m), footers_r)
-        rmap = self._row_count_entries(written, footers_r)
         # rows changed buckets: the only sound per-file floor is the
         # min over EVERYTHING the rescale consumed
-        tv_all = _min_tv(
-            [e for ents in m["files"].values() for e in ents]
+        new_files = self._file_entries(
+            m, new_sid, self._list_commit_files(commit_dir),
+            _min_tv([e for ents in m["files"].values() for e in ents]),
         )
-        new_files = {
-            str(b): [
-                {"path": p, "schema_id": m["schema_id"],
-                 **rmap.get(p, {}),
-                 **({"tv": tv_all} if tv_all else {}),
-                 **({"stats": fstats[p]} if p in fstats else {})}
-                for p in sorted(paths)
-            ]
-            for b, paths in written.items()
-        }
         new_m = {
             **m,
             "snapshot_id": new_sid,
@@ -3475,11 +3366,7 @@ class SnapshotTable:
         }
         new_sid = self._next_snapshot_id()
 
-        written: dict[int, list[str]] = {}
-        fstats: dict[str, dict] = {}
-        bmap: dict[str, str] = {}
         bucket_counts: dict[int, int] = {}
-        n_out = 0
         if ranges:
             src = log_df.filter(
                 bucket_expr(key_cols[0], nb).isin([int(b) for b in buckets])
@@ -3527,28 +3414,15 @@ class SnapshotTable:
             )
             out = bucket_routed(out, buckets, 256, bucket_col=_BUCKET_COL)
             out.write.partitionBy(_BUCKET_COL).parquet(commit_dir)
-            written = self._list_commit_files(commit_dir)
-            footers = self._read_footers(written, self.spark)
-            fstats = self._collect_file_stats(written, self._stats_cols(m), footers)
-            bmap = self._annotate_blooms(m, new_sid, written)
-            bucket_counts = self._footer_counts(written, footers)
-            rmap = self._row_count_entries(written, footers)
-            n_out = sum(bucket_counts.values())
             # rebuilt from the log through the CURRENT transform
-            tv_now = int(m.get("transform_version", 0))
-            for b, paths in written.items():
-                new_files[str(b)] = [
-                    {
-                        "path": p,
-                        "schema_id": m["schema_id"],
-                        **rmap.get(p, {}),
-                        **({"tv": tv_now} if tv_now else {}),
-                        **({"stats": fstats[p]} if p in fstats else {}),
-                        **({"bloom": bmap[p]} if p in bmap else {}),
-                    }
-                    for p in sorted(paths)
-                ]
+            entries = self._file_entries(
+                m, new_sid, self._list_commit_files(commit_dir),
+                int(m.get("transform_version", 0)),
+            )
+            new_files.update(entries)
+            bucket_counts = _bucket_rows(entries)
         new_files = {b: v for b, v in new_files.items() if v}
+        n_out = sum(bucket_counts.values())
 
         new_m = {
             **m,
@@ -3662,6 +3536,7 @@ class SnapshotTable:
         # filtering file-locally equals fold-then-filter. One write job
         # per storage-schema/kind group, never the whole bucket.
         rewritten_entries: dict[str, list[dict]] = {}
+        new_sid = self._next_snapshot_id()
         if straddlers:
             groups: dict[tuple, dict[str, list[str]]] = {}
             for b, ents in straddlers.items():
@@ -3695,26 +3570,11 @@ class SnapshotTable:
                 bucket_routed(
                     df, by_bucket, 256, bucket_col=_BUCKET_COL
                 ).write.partitionBy(_BUCKET_COL).parquet(gdir)
-                written = self._list_commit_files(gdir)
-                footers_g = self._read_footers(written, self.spark)
-                fstats = self._collect_file_stats(
-                    written, self._stats_cols(m), footers_g
-                )
-                bmap = self._annotate_blooms(
-                    m, self._next_snapshot_id(), written
-                )
-                rmap = self._row_count_entries(written, footers_g)
-                for b, wpaths in written.items():
-                    tv_b = _min_tv(straddlers.get(str(b), []))
-                    rewritten_entries.setdefault(str(b), []).extend(
-                        {"path": p, "schema_id": schema_id,
-                         **rmap.get(p, {}),
-                         **({"tv": tv_b} if tv_b else {}),
-                         **({"kind": kind} if kind else {}),
-                         **({"stats": fstats[p]} if p in fstats else {}),
-                         **({"bloom": bmap[p]} if p in bmap else {})}
-                        for p in sorted(wpaths)
-                    )
+                for b, ents in self._file_entries(
+                    m, new_sid, self._list_commit_files(gdir), straddlers,
+                    kind=kind, schema_id=schema_id,
+                ).items():
+                    rewritten_entries.setdefault(b, []).extend(ents)
 
         if drop_entries or straddlers:
             new_files = {b: list(v) for b, v in m["files"].items()}
@@ -3731,7 +3591,6 @@ class SnapshotTable:
                     new_files[b] = kept
                 else:
                     new_files.pop(b)
-            new_sid = self._next_snapshot_id()
             new_m = {
                 **m,
                 "snapshot_id": new_sid,

@@ -5,8 +5,10 @@ and whose sidecars are GC'd with the snapshots that reference them."""
 
 from __future__ import annotations
 
+import datetime
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
 from neosync_spark.bloom import bloom_positions, might_contain
@@ -249,3 +251,54 @@ def test_size_bits_capped(spark):
 
     assert _size_bits(10) == 1024
     assert _size_bits(10**9) == MAX_BITS
+
+
+def _two_day_rows(lsn0, text):
+    # even convs on Jan 1, odd on Jan 3: every file straddles Jan 2
+    return [
+        (lsn0 + i, "insert", f"c{i}", 0, "user", f"{text} {i}", None,
+         f"2026-01-0{1 + 2 * (i % 2)} 00:00:01")
+        for i in range(8)
+    ]
+
+
+@pytest.mark.parametrize("writer", [
+    "merge_cow", "merge_mor", "commit_delta", "compact", "purge_keys",
+    "rescale_buckets", "repair_buckets", "expire_rows",
+])
+def test_every_writer_records_rows_stats_and_bloom(spark, tmp_path, writer):
+    """Every path that writes data files gives each new manifest entry
+    its record count, zone maps and bloom sidecar — a writer that skips
+    one silently loses metadata counts or pruning on its files."""
+    t = _mk_bloom(spark, tmp_path / "t", n_buckets=2)
+    log = _batch(spark, _two_day_rows(0, "a"))
+    t.merge_cdc(
+        log, applied_range=(0, 7), mode="mor" if writer == "compact" else "cow"
+    )
+    before = {e["path"] for ents in t.manifest()["files"].values() for e in ents}
+    again = _batch(spark, _two_day_rows(8, "b"))
+    if writer == "merge_cow":
+        t.merge_cdc(again, applied_range=(8, 15))
+    elif writer == "merge_mor":
+        t.merge_cdc(again, applied_range=(8, 15), mode="mor")
+    elif writer == "commit_delta":
+        written, n_src, schema_id = t.prepare_delta(again)
+        t.commit_delta(written, (8, 15), n_src, schema_id)
+    elif writer == "compact":
+        assert t.compact() is not None
+    elif writer == "purge_keys":
+        assert t.purge_keys(["c0"])["purged_rows"] == 1
+    elif writer == "rescale_buckets":
+        t.rescale_buckets(3)
+    elif writer == "repair_buckets":
+        t.repair_buckets(log, [0, 1])
+    else:
+        rep = t.expire_rows(datetime.datetime(2026, 1, 2))
+        assert rep["files_rewritten"] >= 1
+    new = [
+        e for ents in t.manifest(refresh=True)["files"].values()
+        for e in ents if e["path"] not in before
+    ]
+    assert new
+    for e in new:
+        assert {"rows", "stats", "bloom"} <= set(e), (writer, e)

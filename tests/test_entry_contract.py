@@ -49,6 +49,16 @@ def _norm(df: pd.DataFrame) -> pd.DataFrame:
     return df.sort_values(list(df.columns), kind="mergesort").reset_index(drop=True)
 
 
+def test_log_hi_equals_derived_log_max_lsn(spark):
+    """_log_hi reads max(lsn) off the events footers because every
+    derivation sets lsn = event_id; the aggregate it stands in for
+    must agree."""
+    from pyspark.sql import functions as F
+
+    want = E._derived_log(spark, SF).agg(F.max("lsn")).collect()[0][0]
+    assert E._log_hi(spark, SF) == want
+
+
 def test_entry_runs(spark):
     df = E.entry(spark)
     assert df.count() > 0

@@ -745,84 +745,11 @@ def test_bucket_local_merge_single_exchange_plan(spark, tmp_path):
     assert plan.count("Exchange") == 1
 
 
-def test_late_materialize_equals_default(spark, tmp_path):
-    """late_materialize (narrow in-batch LWW + broadcast winner
-    semi-join; payload crosses the wire once instead of per duplicate)
-    must produce the identical final state as the default single-pass
-    fold, in BOTH commit modes, with transforms applied to the same
-    winning rows. Multi-batch so the COW path also folds against a
-    non-empty target."""
-    from neosync_spark.engine import EngineConfig, ReplayEngine
-    from neosync_spark.functions import transformers as X
-    from neosync_spark.schema import KEY_COLS, transcript_schema
-    from neosync_spark.sources.changelog import ChangeLogSource
-    from neosync_spark.synth import SynthConfig, generate_pandas
-
-    log = generate_pandas(SynthConfig(n_events=6000, n_convs=120))
-    log_dir = str(tmp_path / "log")
-    spark.createDataFrame(log).write.parquet(log_dir)
-
-    for mode in ("cow", "mor"):
-        outs = {}
-        for flag in (False, True):
-            t = SnapshotTable.create(
-                spark, str(tmp_path / f"lm_{mode}_{flag}"),
-                transcript_schema(), key_cols=KEY_COLS, n_buckets=8,
-            )
-            eng = ReplayEngine(
-                spark, t,
-                transforms={"text": X.transform_email(seed=7)},
-                config=EngineConfig(
-                    batch_lsn_size=2500, lineage=False,
-                    merge_mode=mode, late_materialize=flag,
-                ),
-            )
-            eng.replay(ChangeLogSource(spark, log_dir))
-            outs[flag] = sorted(
-                tuple(r) for r in t.read().select(
-                    "conv_id", "turn_idx", "role", "text", "tool"
-                ).collect()
-            )
-        assert outs[False] == outs[True], f"state diverged under {mode}"
-
-
-def test_late_materialize_ignored_for_patch_ops(spark, tmp_path):
-    """patch_ops needs every raw event (a patch that loses the
-    in-batch LWW still contributes its columns) — late_materialize
-    must not thin the source there. Guarded by the and-not-patch_ops
-    condition; this asserts patch folding stays correct with the flag
-    set."""
-    import datetime
-
-    from neosync_spark.schema import KEY_COLS, transcript_schema
-
-    t = SnapshotTable.create(
-        spark, str(tmp_path / "p"), transcript_schema(),
-        key_cols=KEY_COLS, n_buckets=4,
-    )
-    ts = datetime.datetime(2024, 1, 1)
-    rows = [
-        ("insert", "c1", 0, "user", "hello", None, ts, 1),
-        ("patch", "c1", 0, None, None, '{"name":"t"}', ts + datetime.timedelta(seconds=1), 2),
-        ("patch", "c1", 0, None, "world", None, ts + datetime.timedelta(seconds=2), 3),
-    ]
-    batch = spark.createDataFrame(
-        rows, "op string, conv_id string, turn_idx int, role string, "
-              "text string, tool string, ts timestamp, lsn long",
-    )
-    t.merge_cdc(
-        batch, applied_range=(1, 4), source_is_raw=True,
-        patch_ops=True, late_materialize=True, lineage=False,
-    )
-    got = t.read().select("role", "text", "tool").collect()
-    assert [tuple(r) for r in got] == [("user", "world", '{"name":"t"}')]
-
-
 def test_distributed_footer_reads_match_threadpool(spark, tmp_path):
     """Commits over _FOOTER_DISTRIBUTE_OVER files read footers in a
     Spark job; same result as the driver thread pool (num_rows, stats,
-    schema columns), so zone maps / counts / patch detection are
-    byte-identical either way."""
+    schema columns), so the manifest entries built from them (zone
+    maps, counts, patch detection) are identical either way."""
     from pyspark.sql import functions as F
 
     from neosync_spark.lakehouse import SnapshotTable
@@ -850,16 +777,21 @@ def test_distributed_footer_reads_match_threadpool(spark, tmp_path):
         int(b): [e["path"] for e in ents] for b, ents in m["files"].items()
     }
     pool = SnapshotTable._read_footers(written)  # threadpool path
+    pool_entries = t._file_entries(m, 99, written, 0)
     old = SnapshotTable._FOOTER_DISTRIBUTE_OVER
     SnapshotTable._FOOTER_DISTRIBUTE_OVER = 1
     try:
         dist = SnapshotTable._read_footers(written, spark)  # job path
+        dist_entries = t._file_entries(m, 99, written, 0)
     finally:
         SnapshotTable._FOOTER_DISTRIBUTE_OVER = old
     assert set(pool) == set(dist) and len(pool) >= 4
     cols = t._stats_cols(m)
     assert SnapshotTable._collect_file_stats(written, cols, pool) == \
            SnapshotTable._collect_file_stats(written, cols, dist)
-    assert SnapshotTable._footer_counts(written, pool) == \
-           SnapshotTable._footer_counts(written, dist)
-    assert SnapshotTable._patch_paths(pool) == SnapshotTable._patch_paths(dist)
+    assert pool_entries == dist_entries
+    # the committed entries came from the same footers
+    assert pool_entries == {
+        b: sorted(ents, key=lambda e: e["path"])
+        for b, ents in m["files"].items()
+    }

@@ -334,7 +334,6 @@ def _q_manifest_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
             applied_range=(lo, hi_),
             mode="mor",
             source_is_raw=True,
-            prune_buckets=False,
             lineage=False,
         )
     segs = _glob.glob(os.path.join(path, "metadata", "seg-*.json"))
@@ -502,8 +501,7 @@ def _q_purge_subject(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark,
         table,
         config=EngineConfig(
-            batch_lsn_size=batch, lineage=False, prune_buckets=False,
-            merge_mode="mor",
+            batch_lsn_size=batch, lineage=False, merge_mode="mor",
         ),
     )
 
@@ -1930,9 +1928,6 @@ def _q_stats_pruned_read(spark: SparkSession, sf_dir: str) -> DataFrame:
         table,
         config=EngineConfig(
             batch_lsn_size=batch, lineage=False, merge_mode="mor",
-            # uniform keys: skip the prune pre-pass and keep the delta
-            # write on one bucket-aligned exchange (see flagship)
-            prune_buckets=False, bucket_local_merge=True,
         ),
     )
 
@@ -5222,8 +5217,7 @@ def _q_transform_backfill(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark,
         table,
         config=EngineConfig(
-            batch_lsn_size=batch, lineage=False, prune_buckets=False,
-            merge_mode="mor",
+            batch_lsn_size=batch, lineage=False, merge_mode="mor",
         ),
     )
 
@@ -5674,7 +5668,6 @@ def _q_patch_merge_mor(spark: SparkSession, sf_dir: str) -> DataFrame:
             mode="mor",
             patch_ops=True,
             source_is_raw=True,
-            prune_buckets=False,
             lineage=False,
         )
     return table.read().select(
@@ -5712,9 +5705,6 @@ def _q_bloom_pruned_read(spark: SparkSession, sf_dir: str) -> DataFrame:
         table,
         config=EngineConfig(
             batch_lsn_size=batch, lineage=False, merge_mode="mor",
-            # uniform keys: skip the prune pre-pass and keep the delta
-            # write on one bucket-aligned exchange (see flagship)
-            prune_buckets=False, bucket_local_merge=True,
         ),
     )
 
@@ -5939,7 +5929,6 @@ def _q_retention_expiry(spark: SparkSession, sf_dir: str) -> DataFrame:
         table,
         config=EngineConfig(
             batch_lsn_size=hi + 2, lineage=False, merge_mode="mor",
-            prune_buckets=False, bucket_local_merge=True,  # uniform keys
         ),
     )
 
@@ -6002,7 +5991,6 @@ def _q_retention_patch_fallback(spark: SparkSession, sf_dir: str) -> DataFrame:
             applied_range=(lo, hi_),
             mode="mor",
             source_is_raw=True,
-            prune_buckets=False,
             lineage=False,
         )
     # … then the subset keys' partial-image feed in ONE pruned merge:

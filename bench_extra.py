@@ -70,20 +70,23 @@ def main() -> None:
         except Exception as e:  # noqa: BLE001
             print(f"# warmup {name} failed: {e}", file=sys.stderr)
     for name in names:
-        best, n = None, 0
+        best, best_n = None, None
         for _ in range(REPEATS):
             spark.sparkContext.setJobDescription(f"{mode}:{name}")
             t0 = time.time()
             df = qs[name](spark, SF_DIR)
+            n = None
             if mode == "noop":
                 df.write.format("noop").mode("overwrite").save()
             else:
                 n = df.count()
             dt = time.time() - t0
             if best is None or dt < best:
-                best = dt
+                best, best_n = dt, n
         out[name] = round(best, 2)
-        print(f"# {name}: {out[name]}s ({n} rows)", file=sys.stderr)
+        # the noop sink returns no row count
+        rows = "" if best_n is None else f" ({best_n} rows)"
+        print(f"# {name}: {out[name]}s{rows}", file=sys.stderr)
     spark.stop()
     print(json.dumps({"sf": SF_DIR, "cpus": CPUS, "mode": mode, "queries": out}))
 

@@ -19,6 +19,7 @@ LWW globally correct).
 
 from __future__ import annotations
 
+import threading
 from dataclasses import dataclass, field
 from typing import Callable
 
@@ -51,7 +52,8 @@ class EngineConfig:
     compact_deltas_over: int | None = 8
     # False: skip the per-batch bucket-stats pre-pass (one fewer scan) —
     # right when batch keys hit most buckets anyway (uniform keys);
-    # keep True for key-local update streams so merges stay bucket-pruned
+    # keep True for key-local update streams so merges stay bucket-pruned.
+    # COW only: MoR never runs the pre-pass
     prune_buckets: bool = True
     # quarantine poison rows (bad op / null key / null lsn) to
     # <table>/metadata/quarantine instead of failing the batch — the
@@ -74,12 +76,13 @@ class EngineConfig:
     # merge_cdc patch_ops — COW folds at write, MoR stores raw + folds
     # at read); requires the source slices to be raw event history
     patch_ops: bool = False
-    # align the merge shuffle with the table's bucket layout: ONE
-    # exchange on the bucket column serves both the LWW aggregate and
-    # the per-bucket write (see merge_cdc bucket_local_merge for the
-    # cluster-network rationale and the locally-measured-neutral note);
-    # keep False for skewed/hot-key sources (the combine collapses
-    # duplicates before the wire there)
+    # COW only: align the merge shuffle with the table's bucket layout —
+    # ONE exchange on the bucket column serves both the LWW aggregate
+    # and the per-bucket write (see merge_cdc bucket_local_merge for
+    # the cluster-network rationale). Not the default: in 4 paired local
+    # runs it made a 600k-event commit 8% slower and raised key-local
+    # tail memory 25%. Keep False for skewed/hot-key sources (the
+    # combine collapses duplicates before the wire there)
     bucket_local_merge: bool = False
     # (txn_id_col, txn_total_col): source-transaction-atomic apply for
     # commit-contiguous logs — every micro-batch end is snapped DOWN to
@@ -261,6 +264,14 @@ class ReplayEngine:
             out = self.df_transform(out)
         return out
 
+    @property
+    def _merge_transform(self):
+        """What the merge applies to source rows: the column transforms
+        plus the df-level hook, or None when neither is set."""
+        if self.transforms or self.df_transform:
+            return self.effective_transform
+        return None
+
     def pandas_transform(self, pdf: pd.DataFrame) -> pd.DataFrame:
         """The SAME transforms applied in pandas — the oracle path."""
         if not self.transforms:
@@ -414,11 +425,7 @@ class ReplayEngine:
             applied_range=applied_range,
             lineage=self.config.lineage,
             mode=self.config.merge_mode,
-            transform=(
-                self.effective_transform
-                if (self.transforms or self.df_transform)
-                else None
-            ),
+            transform=self._merge_transform,
             source_is_raw=True,
             prune_buckets=self.config.prune_buckets,
             target_df=self._chained_state if chaining else None,
@@ -475,20 +482,19 @@ class ReplayEngine:
             )
             if _os.path.isdir(stale):
                 _shutil.rmtree(stale, ignore_errors=True)
-        if (
-            self.config.merge_mode == "mor"
-            and self.config.compact_deltas_over is not None
-        ):
-            pressure = self.table.delta_file_counts()
-            hot = [
-                b for b, n in pressure.items() if n > self.config.compact_deltas_over
-            ]
-            if hot:
-                self.table.compact(
-                    buckets=hot, on_conflict=self.config.on_conflict
-                )
+        self._maybe_compact_deltas()
         self._maybe_compact_ledger()
         return info
+
+    def _maybe_compact_deltas(self) -> None:
+        """MoR auto-compaction: fold every bucket holding more than
+        ``compact_deltas_over`` delta files."""
+        over = self.config.compact_deltas_over
+        if self.config.merge_mode != "mor" or over is None:
+            return
+        hot = [b for b, n in self.table.delta_file_counts().items() if n > over]
+        if hot:
+            self.table.compact(buckets=hot, on_conflict=self.config.on_conflict)
 
     def _maybe_compact_ledger(self) -> None:
         """Amortized ledger bound: compact only past 2× the keep window
@@ -559,19 +565,7 @@ class ReplayEngine:
             if self.table.is_applied(lo, hi):
                 stats.batches_skipped += 1
                 continue
-            if self.registry is not None and self.registry.versions:
-                declared = self.registry.version_for_lsn(hi - 1)
-                ops = ensure_table_schema(
-                    self.table,
-                    declared.schema,
-                    self.registry.policy,
-                    renames=getattr(declared, "rename_map", None),
-                )
-                stats.schema_ops.extend(ops)
-                if ops and self._chained_state is not None:
-                    # schema changed: the cached state has stale columns
-                    self._chained_state.unpersist()
-                    self._chained_state = None
+            self._ensure_declared_schema(hi - 1, stats)
             info = self.apply_batch(slicer(lo, hi), (lo, hi))
             stats.batches_applied += 1
             stats.rows_applied += info.rows_written
@@ -583,6 +577,24 @@ class ReplayEngine:
             ):
                 break
         return stats
+
+    def _ensure_declared_schema(self, lsn: int, stats: ReplayStats) -> None:
+        """Evolve the table to the registry version declared for
+        ``lsn`` (no-op without a registry), recording the schema ops."""
+        if self.registry is None or not self.registry.versions:
+            return
+        declared = self.registry.version_for_lsn(lsn)
+        ops = ensure_table_schema(
+            self.table,
+            declared.schema,
+            self.registry.policy,
+            renames=getattr(declared, "rename_map", None),
+        )
+        stats.schema_ops.extend(ops)
+        if ops and self._chained_state is not None:
+            # schema changed: the cached state has stale columns
+            self._chained_state.unpersist()
+            self._chained_state = None
 
     def _replay_txn_atomic(
         self,
@@ -636,18 +648,7 @@ class ReplayEngine:
                 stats.batches_skipped += 1
                 lo = hi
                 continue
-            if self.registry is not None and self.registry.versions:
-                declared = self.registry.version_for_lsn(hi - 1)
-                ops = ensure_table_schema(
-                    self.table,
-                    declared.schema,
-                    self.registry.policy,
-                    renames=getattr(declared, "rename_map", None),
-                )
-                stats.schema_ops.extend(ops)
-                if ops and self._chained_state is not None:
-                    self._chained_state.unpersist()
-                    self._chained_state = None
+            self._ensure_declared_schema(hi - 1, stats)
             info = self.apply_batch(batch.drop(txn_col, total_col), (lo, hi))
             stats.batches_applied += 1
             stats.rows_applied += info.rows_written
@@ -690,19 +691,25 @@ class ReplayEngine:
                     "schema evolves inside the pipelined range — replay "
                     "serially across the evolution point"
                 )
-            ensure_table_schema(
-                self.table,
-                v_hi.schema,
-                self.registry.policy,
-                renames=getattr(v_hi, "rename_map", None),
-            )
+            self._ensure_declared_schema(lsn_hi, stats)
 
         ranges = [
             r for r in self.plan_ranges(lsn_lo, lsn_hi)
             if not self.table.is_applied(*r)
         ]
         stats.batches_skipped = len(self.plan_ranges(lsn_lo, lsn_hi)) - len(ranges)
-        transform = self.transform_batch if self.transforms else None
+        merge_transform = self._merge_transform
+        transform = None
+        if merge_transform is not None:
+            # plans are built on the worker threads, and a df-level hook
+            # may act while building (crypto-shred mints missing subject
+            # keys, a check-then-write on the key store): one at a time
+            lock = threading.Lock()
+
+            def transform(df):
+                with lock:
+                    return merge_transform(df)
+
         with ThreadPoolExecutor(max_workers=max_inflight) as ex:
             futures = [
                 ex.submit(
@@ -724,15 +731,7 @@ class ReplayEngine:
                 stats.batches_applied += 1
                 stats.rows_applied += info.rows_written
                 stats.commits.append(info)
-        if self.config.compact_deltas_over is not None:
-            pressure = self.table.delta_file_counts()
-            hot = [
-                b for b, n in pressure.items() if n > self.config.compact_deltas_over
-            ]
-            if hot:
-                self.table.compact(
-                    buckets=hot, on_conflict=self.config.on_conflict
-                )
+        self._maybe_compact_deltas()
         self._maybe_compact_ledger()
         return stats
 
@@ -836,11 +835,7 @@ class ReplayEngine:
                     applied_range=None,
                     lineage=self.config.lineage,
                     mode=self.config.merge_mode,
-                    transform=(
-                        self.effective_transform
-                        if (self.transforms or self.df_transform)
-                        else None
-                    ),
+                    transform=self._merge_transform,
                     source_is_raw=True,
                     prune_buckets=self.config.prune_buckets,
                     patch_ops=self.config.patch_ops,

@@ -272,6 +272,7 @@ class BranchAuditError(RuntimeError):
 # under a stale schema_id; rollback/repair: history surgery) is
 # structural — rebase refuses and the caller must recompute from the
 # new head.
+# "merge_mor_pipelined" names MoR commits in older table histories.
 _REBASE_SAFE_OPS = {
     "merge_cow", "merge_mor", "merge_mor_pipelined", "compact", "retention",
 }
@@ -1501,7 +1502,10 @@ class SnapshotTable:
         DELTA files — no target read, O(batch) write amplification —
         with LWW resolved at read time / by compact(). The right mode
         for high-frequency tailing at 10^10 events; equivalent final
-        state (tests assert it).
+        state (tests assert it). It runs ``prepare_delta`` +
+        ``commit_delta``, like pipelined replay; ``prune_buckets``,
+        ``bucket_local_merge``, ``target_df`` and ``chain_state`` are
+        COW-only.
 
         If ``applied_range`` is already in the ledger this is a NO-OP
         (exactly-once replay; reference analog retry⇒DO NOTHING).
@@ -1541,13 +1545,15 @@ class SnapshotTable:
         when in-batch duplicate density per partition is LOW (at 10^10
         events over 10^9 keys a map-side combine reduces ~0%, so the
         default pays a full-size key exchange AND a second winner-set
-        exchange over the wire); measured locally the two modes are
-        within noise of each other (local shuffles are memcpy — which
-        is why this is a knob, not a new default). Keep the default for
-        skewed/hot-key sources, where the combine collapses duplicates
-        before the wire and hot buckets would serialize into single
-        partitions. Final state is identical either way (tests assert
-        it).
+        exchange over the wire). It is not the default because it
+        loses on the local benchmark (4 alternating pairs, 4 vCPUs): a
+        600k-event commit into 8 buckets went from 3.66 to 3.97 s
+        median (events/s -7.6%), and key-local 2k-event commits into 64
+        buckets went from 1.05 to 0.97 s but retained memory from 728
+        to 911 MB (+25%). Keep the default for skewed/hot-key sources,
+        where the combine collapses duplicates before the wire and hot
+        buckets would serialize into single partitions. COW only.
+        Final state is identical either way (tests assert it).
 
         ``source_is_raw=True`` is the engine fast path: the batch may
         hold many events per key and is not yet anonymized — the stats
@@ -1556,7 +1562,7 @@ class SnapshotTable:
         ``transform`` (df → df) is applied ONLY to the winning source
         rows, inside the key-partitioned merge stage. With the default
         (False) the caller provides a key-unique, already-transformed
-        batch, which is persisted to avoid recomputing it twice.
+        batch, which COW persists to avoid recomputing it twice.
 
         ``on_conflict`` governs concurrent writers (the Iceberg
         optimistic-concurrency model): ``'fail'`` (default) raises
@@ -1575,36 +1581,11 @@ class SnapshotTable:
         """
         if mode not in ("cow", "mor"):
             raise ValueError(f"unknown merge mode {mode!r}; use 'cow' or 'mor'")
-        if patch_ops and not source_is_raw:
-            # the batch must be the raw event history — a pre-deduped
-            # "key-unique" batch has already destroyed the patches it
-            # contained
-            raise ValueError("patch_ops requires source_is_raw=True")
-        if target_df is not None and prune_buckets:
-            # a chained state must cover the WHOLE table: with pruning on,
-            # untouched buckets' file lists would be replaced by the
-            # (source-only) merge output, silently dropping committed rows
-            raise ValueError(
-                "target_df (chained state) requires prune_buckets=False — "
-                "the supplied state must cover every bucket"
-            )
         m = self.manifest(refresh=True)
         if applied_range is not None and self.is_applied(*applied_range):
             return CommitInfo(m["snapshot_id"], 0, 0, applied_range)
-
-        required = {"op", "lsn", "ts", *m["key_cols"]}
-        missing = required - set(batch.columns)
-        if missing:
-            raise ValueError(
-                f"CDC batch is missing required columns {sorted(missing)}; "
-                f"need op/lsn/ts + key columns {m['key_cols']}"
-            )
-
         key_cols = m["key_cols"]
-        nb = m["bucket_count"]
-        cur = self.current_schema(m)
-        payload_cols = [f.name for f in cur.fields]
-
+        self._check_cdc_batch(batch, key_cols, source_is_raw, patch_ops)
         if debug_assert_unique and not source_is_raw:
             dup = (
                 batch.groupBy(*key_cols).count().filter(F.col("count") > 1).limit(1).collect()
@@ -1614,6 +1595,34 @@ class SnapshotTable:
                     f"merge source is not key-unique (e.g. {tuple(dup[0])[:-1]}); "
                     "LWW-dedup the batch or pass source_is_raw=True"
                 )
+        if mode == "mor":
+            # under 'retry' a conflict re-prepares (this attempt's
+            # files are orphans, GC-able)
+            while True:
+                written, n_src, token = self.prepare_delta(
+                    batch, transform, source_is_raw, patch_ops
+                )
+                try:
+                    return self.commit_delta(
+                        written, applied_range, n_src, token,
+                        lineage=lineage, on_conflict=on_conflict,
+                    )
+                except CommitConflictError:
+                    if on_conflict != "retry" or _retry_budget <= 0:
+                        raise
+                    _retry_budget -= 1
+
+        if target_df is not None and prune_buckets:
+            # a chained state must cover the WHOLE table: with pruning on,
+            # untouched buckets' file lists would be replaced by the
+            # (source-only) merge output, silently dropping committed rows
+            raise ValueError(
+                "target_df (chained state) requires prune_buckets=False — "
+                "the supplied state must cover every bucket"
+            )
+        nb = m["bucket_count"]
+        cur = self.current_schema(m)
+        payload_cols = [f.name for f in cur.fields]
         src = batch.withColumn(_BUCKET_COL, bucket_expr(key_cols[0], nb))
         persisted = not source_is_raw
         if persisted:
@@ -1644,133 +1653,101 @@ class SnapshotTable:
 
             s_side = self._source_side(src, cur, patch_ops=patch_ops)
 
-            if mode == "mor":
-                # delta write: LWW deferred to read/compact; raw batches
-                # are in-batch deduped so delta volume stays O(keys).
-                # Under patch_ops the batch is written RAW (no in-batch
-                # fold): folding a patch into a same-batch full image
-                # would freeze column provenance, making a LATER-batch
-                # but OLDER-ts full image unable to reclaim the columns
-                # it owns — keeping raw events means the read-time fold
-                # always sees the full history, so MoR patches are
-                # correct under arbitrary cross-batch ts disorder
-                # (stronger than the COW patch path, which folds at
-                # write and needs per-key in-order delivery).
-                won = s_side
-                if source_is_raw and not patch_ops:
-                    if bucket_local_merge:
-                        nop = (
-                            max(1, min(len(affected), 256))
-                            if affected is not None
-                            else max(1, min(nb, 256))
-                        )
-                        won = won.repartition(nop, F.col(_BUCKET_COL))
-                        won = lww_dedup(
-                            won, [_BUCKET_COL, *key_cols], ["ts", _LSN_COL]
-                        )
-                    else:
-                        won = lww_dedup(won, key_cols, ["ts", _LSN_COL])
-                if transform is not None:
-                    won = transform(won)
+            # COW: read current rows of affected buckets and resolve
+            # LWW now — ONE shuffle covers in-batch dedup AND the
+            # target merge. Target rows keep their tombstone state;
+            # _src breaks exact (ts,_lsn) ties in favor of the
+            # incoming row (idempotent: identical payload).
+            if target_df is not None:
+                # chained state from the previous commit (identical
+                # to the written files; avoids re-scanning parquet)
+                target = target_df
             else:
-                # COW: read current rows of affected buckets and resolve
-                # LWW now — ONE shuffle covers in-batch dedup AND the
-                # target merge. Target rows keep their tombstone state;
-                # _src breaks exact (ts,_lsn) ties in favor of the
-                # incoming row (idempotent: identical payload).
-                if target_df is not None:
-                    # chained state from the previous commit (identical
-                    # to the written files; avoids re-scanning parquet)
-                    target = target_df
-                else:
-                    target = self.read(buckets=affected, internal=True).withColumn(
-                        _BUCKET_COL, bucket_expr(key_cols[0], nb)
-                    )
-                t_side = target.select(
-                    *payload_cols,
-                    F.col(_LSN_COL),
-                    F.col(_DELETED_COL).alias("_del"),
-                    F.lit(0).alias("_src"),
-                    F.col(_BUCKET_COL),
+                target = self.read(buckets=affected, internal=True).withColumn(
+                    _BUCKET_COL, bucket_expr(key_cols[0], nb)
                 )
-                if patch_ops:
-                    # target rows are full images by construction
-                    t_side = t_side.withColumn("_patch", F.lit(False))
-                    if transform is not None:
-                        # transform RAW source events BEFORE the fold
-                        # (per event, like the MoR path): the fold's
-                        # winner row mixes target-derived columns —
-                        # already transformed at a prior commit — with
-                        # source values, so a post-fold whole-row
-                        # transform would double-transform the
-                        # untouched columns (f(f(x)) != f(x)). NULL
-                        # patch columns must stay NULL through the
-                        # transform (NULL = unchanged) — the engine's
-                        # column mappings are NULL-preserving.
-                        s_side = transform(s_side)
-                unioned = t_side.unionByName(s_side)
-                if bucket_local_merge and not patch_ops:
-                    nop = (
-                        max(1, min(len(affected), 256))
-                        if affected is not None
-                        else max(1, min(nb, 256))
-                    )
-                    unioned = unioned.repartition(nop, F.col(_BUCKET_COL))
-                if patch_ops:
-                    value_cols = [
-                        c for c in payload_cols
-                        if c not in key_cols and c != "ts"
-                    ]
-                    won = patch_fold(
-                        unioned, key_cols, ["ts", _LSN_COL, "_src"], value_cols
-                    )
-                elif bucket_local_merge:
-                    won = lww_dedup(
-                        unioned, [_BUCKET_COL, *key_cols], ["ts", _LSN_COL, "_src"]
-                    )
-                else:
-                    won = lww_dedup(unioned, key_cols, ["ts", _LSN_COL, "_src"])
-                if transform is not None and not patch_ops:
-                    # anonymize ONLY the winning source rows (target rows
-                    # were transformed when first applied). Preferred
-                    # plan: one conditional projection over the agg
-                    # output (engine.transform_batch(only_where=...)) —
-                    # a filter-split-union re-runs the LWW aggregation
-                    # once PER BRANCH (the shuffle is reused, the agg is
-                    # not). Fall back to the split for df→df transforms
-                    # that can't apply conditionally (Python-UDF
-                    # transformers, ad-hoc test callables) — unless the
-                    # target contributed nothing (bootstrap / bulk load
-                    # into empty buckets, known metadata-only): every
-                    # winner is then a source row and the transform
-                    # applies unconditionally in one pass, skipping the
-                    # duplicated aggregation entirely.
-                    target_empty = target_df is None and not any(
-                        m["files"].get(str(b))
-                        for b in (affected if affected is not None
-                                  else range(nb))
-                    )
-                    if target_empty:
-                        won = transform(won)
-                    else:
-                        cond_res = None
-                        try:
-                            cond_res = transform(
-                                won, only_where=F.col("_src") == 1
-                            )
-                        except TypeError:
-                            cond_res = None
-                        if cond_res is not None:
-                            won = cond_res
-                        else:
-                            new_rows = transform(won.filter(F.col("_src") == 1))
-                            kept_rows = won.filter(F.col("_src") != 1)
-                            won = new_rows.unionByName(kept_rows)
-
-            out = self._finalize_rows(
-                won, cur, key_cols,
-                include_patch=(patch_ops and mode == "mor"),
+            t_side = target.select(
+                *payload_cols,
+                F.col(_LSN_COL),
+                F.col(_DELETED_COL).alias("_del"),
+                F.lit(0).alias("_src"),
+                F.col(_BUCKET_COL),
             )
+            if patch_ops:
+                # target rows are full images by construction
+                t_side = t_side.withColumn("_patch", F.lit(False))
+                if transform is not None:
+                    # transform RAW source events BEFORE the fold
+                    # (per event, like the MoR path): the fold's
+                    # winner row mixes target-derived columns —
+                    # already transformed at a prior commit — with
+                    # source values, so a post-fold whole-row
+                    # transform would double-transform the
+                    # untouched columns (f(f(x)) != f(x)). NULL
+                    # patch columns must stay NULL through the
+                    # transform (NULL = unchanged) — the engine's
+                    # column mappings are NULL-preserving.
+                    s_side = transform(s_side)
+            unioned = t_side.unionByName(s_side)
+            if bucket_local_merge and not patch_ops:
+                nop = (
+                    max(1, min(len(affected), 256))
+                    if affected is not None
+                    else max(1, min(nb, 256))
+                )
+                unioned = unioned.repartition(nop, F.col(_BUCKET_COL))
+            if patch_ops:
+                value_cols = [
+                    c for c in payload_cols
+                    if c not in key_cols and c != "ts"
+                ]
+                won = patch_fold(
+                    unioned, key_cols, ["ts", _LSN_COL, "_src"], value_cols
+                )
+            elif bucket_local_merge:
+                won = lww_dedup(
+                    unioned, [_BUCKET_COL, *key_cols], ["ts", _LSN_COL, "_src"]
+                )
+            else:
+                won = lww_dedup(unioned, key_cols, ["ts", _LSN_COL, "_src"])
+            if transform is not None and not patch_ops:
+                # anonymize ONLY the winning source rows (target rows
+                # were transformed when first applied). Preferred
+                # plan: one conditional projection over the agg
+                # output (engine.transform_batch(only_where=...)) —
+                # a filter-split-union re-runs the LWW aggregation
+                # once PER BRANCH (the shuffle is reused, the agg is
+                # not). Fall back to the split for df→df transforms
+                # that can't apply conditionally (Python-UDF
+                # transformers, ad-hoc test callables) — unless the
+                # target contributed nothing (bootstrap / bulk load
+                # into empty buckets, known metadata-only): every
+                # winner is then a source row and the transform
+                # applies unconditionally in one pass, skipping the
+                # duplicated aggregation entirely.
+                target_empty = target_df is None and not any(
+                    m["files"].get(str(b))
+                    for b in (affected if affected is not None
+                              else range(nb))
+                )
+                if target_empty:
+                    won = transform(won)
+                else:
+                    cond_res = None
+                    try:
+                        cond_res = transform(
+                            won, only_where=F.col("_src") == 1
+                        )
+                    except TypeError:
+                        cond_res = None
+                    if cond_res is not None:
+                        won = cond_res
+                    else:
+                        new_rows = transform(won.filter(F.col("_src") == 1))
+                        kept_rows = won.filter(F.col("_src") != 1)
+                        won = new_rows.unionByName(kept_rows)
+
+            out = self._finalize_rows(won, cur, key_cols)
 
             new_sid = self._next_snapshot_id()
             commit_dir = os.path.join(
@@ -1794,8 +1771,7 @@ class SnapshotTable:
             # is written by the CURRENT anonymization policy (the
             # engine's transforms run inside this merge).
             own_entries = self._file_entries(
-                m, new_sid, written, int(m.get("transform_version", 0)),
-                kind="delta" if mode == "mor" else None,
+                m, new_sid, written, int(m.get("transform_version", 0))
             )
             if affected is None:  # no-prepass mode: stats post-hoc
                 affected = sorted(written)
@@ -1804,56 +1780,30 @@ class SnapshotTable:
                 # recompute over the micro-batch source
                 n_src = int(got["n_src"]) if got else src.count()
                 bucket_counts = _bucket_rows(own_entries)
-            replaced: dict[str, set[str]] | None = None
-            if mode != "mor":
-                rewritten = affected if prune_buckets else [
-                    int(b) for b in m["files"]
-                ]
-                own_entries = {
-                    **{str(b): [] for b in rewritten}, **own_entries
-                }
-                replaced = {
-                    str(b): {e["path"] for e in m["files"].get(str(b), [])}
-                    for b in rewritten
-                }
-
-            new_files = {b: list(v) for b, v in m["files"].items()}
-            if mode == "mor":
-                for b, ents in own_entries.items():
-                    new_files.setdefault(b, []).extend(ents)
-            else:
-                for b in replaced:
-                    new_files.pop(b, None)
-                for b, ents in own_entries.items():
-                    if ents:
-                        new_files[b] = ents
-
-            ledger = list(m["checkpoint"]["applied"])
-            ledger_row = None
-            if applied_range is not None:
-                ledger_row = [
-                    int(applied_range[0]), int(applied_range[1]), new_sid, n_src
-                ]
-                ledger.append(ledger_row)
-
-            new_m = {
-                **m,
-                "snapshot_id": new_sid,
-                "parent": m["snapshot_id"],
-                "files": new_files,
-                "checkpoint": {**m["checkpoint"], "applied": ledger},
-                "summary": {
-                    "operation": f"merge_{mode}",
-                    "source_rows": n_src,
-                    "buckets_rewritten": len(affected),
-                },
+            rewritten = affected if prune_buckets else [
+                int(b) for b in m["files"]
+            ]
+            own_entries = {**{str(b): [] for b in rewritten}, **own_entries}
+            replaced = {
+                str(b): {e["path"] for e in m["files"].get(str(b), [])}
+                for b in rewritten
             }
 
+            new_files = {b: list(v) for b, v in m["files"].items()}
+            for b in replaced:
+                new_files.pop(b, None)
+            for b, ents in own_entries.items():
+                if ents:
+                    new_files[b] = ents
+
+            new_m, ledger_row = self._merge_manifest(
+                m, new_sid, new_files, applied_range, n_src, "merge_cow",
+                len(affected),
+            )
             try:
                 committed, noop = self._commit_manifest(
                     new_m,
                     on_conflict="rebase" if on_conflict == "retry" else on_conflict,
-                    kind="append" if mode == "mor" else "rewrite",
                     own_entries=own_entries,
                     replaced_paths=replaced,
                     ledger_row=ledger_row,
@@ -1872,7 +1822,6 @@ class SnapshotTable:
                     batch,
                     applied_range=applied_range,
                     lineage=lineage,
-                    mode=mode,
                     transform=transform,
                     source_is_raw=source_is_raw,
                     prune_buckets=prune_buckets,
@@ -1961,7 +1910,42 @@ class SnapshotTable:
             F.col(_BUCKET_COL),
         )
 
-    # ---------- pipelined MoR commits ----------
+    @staticmethod
+    def _merge_manifest(m, new_sid, new_files, applied_range, n_src, op, n_buckets):
+        """The manifest a merge commits on top of ``m``, and the ledger
+        row it adds for ``applied_range`` (None without a range)."""
+        ledger = list(m["checkpoint"]["applied"])
+        ledger_row = None
+        if applied_range is not None:
+            ledger_row = [int(applied_range[0]), int(applied_range[1]), new_sid, n_src]
+            ledger.append(ledger_row)
+        summary = {"operation": op, "source_rows": n_src, "buckets_rewritten": n_buckets}
+        return {
+            **m,
+            "snapshot_id": new_sid,
+            "parent": m["snapshot_id"],
+            "files": new_files,
+            "checkpoint": {**m["checkpoint"], "applied": ledger},
+            "summary": summary,
+        }, ledger_row
+
+    @staticmethod
+    def _check_cdc_batch(batch, key_cols, source_is_raw, patch_ops) -> None:
+        """Reject a batch no merge can apply: missing op/lsn/ts/key
+        columns, or partial images without the raw event history."""
+        if patch_ops and not source_is_raw:
+            # the batch must be the raw event history — a pre-deduped
+            # "key-unique" batch has already destroyed the patches it
+            # contained
+            raise ValueError("patch_ops requires source_is_raw=True")
+        missing = {"op", "lsn", "ts", *key_cols} - set(batch.columns)
+        if missing:
+            raise ValueError(
+                f"CDC batch is missing required columns {sorted(missing)}; "
+                f"need op/lsn/ts + key columns {list(key_cols)}"
+            )
+
+    # ---------- MoR delta commits ----------
 
     def prepare_delta(
         self,
@@ -1980,22 +1964,22 @@ class SnapshotTable:
         from pyspark.sql import Observation
 
         m = self.manifest(refresh=True)
-        required = {"op", "lsn", "ts", *m["key_cols"]}
-        missing = required - set(batch.columns)
-        if missing:
-            raise ValueError(f"CDC batch is missing required columns {sorted(missing)}")
         key_cols = m["key_cols"]
+        self._check_cdc_batch(batch, key_cols, source_is_raw, patch_ops)
         nb = m["bucket_count"]
         cur = self.current_schema(m)
 
-        if patch_ops and not source_is_raw:
-            raise ValueError("patch_ops requires source_is_raw=True")
         src = batch.withColumn(_BUCKET_COL, bucket_expr(key_cols[0], nb))
         obs = Observation()
         src = src.observe(obs, F.count(F.lit(1)).alias("n_src"))
         won = self._source_side(src, cur, patch_ops=patch_ops)
         if source_is_raw and not patch_ops:
-            # patch batches stay RAW (see merge_cdc's MoR patch note)
+            # dedup keeps delta volume O(keys). Patch batches stay RAW:
+            # folding a patch into a same-batch full image would stop a
+            # LATER-batch but OLDER-ts full image from reclaiming its
+            # columns; the read-time fold over raw events is correct
+            # under any cross-batch ts disorder (COW folds at write and
+            # needs per-key in-order delivery).
             won = lww_dedup(won, key_cols, ["ts", _LSN_COL])
         if transform is not None:
             won = transform(won)
@@ -2014,11 +1998,11 @@ class SnapshotTable:
         written: dict[int, list[str]],
         applied_range: tuple[int, int] | None,
         n_src: int,
-        schema_id: "int | tuple[int, int]",
+        token: tuple[int, int],
         lineage: bool = True,
         on_conflict: str = "fail",
     ) -> CommitInfo:
-        """Metadata half of a pipelined MoR commit: register the delta
+        """Metadata half of a MoR delta commit: register the delta
         files + ledger range atomically. With the default
         ``on_conflict='fail'`` it must be called in lsn order (single
         writer); ``'rebase'`` lets concurrent pipelined writers land in
@@ -2026,19 +2010,18 @@ class SnapshotTable:
         across data-plane commits (read-time LWW orders by (ts, lsn),
         not by commit order), and a duplicate applied_range becomes a
         no-op. A crash before this point leaves orphan files only — the
-        range is not in the ledger, so replay re-does it."""
+        range is not in the ledger, so replay re-does it. ``token`` is
+        the (schema_id, bucket_count) ``prepare_delta`` wrote under."""
         m = self.manifest(refresh=True)
         if applied_range is not None and self.is_applied(*applied_range):
             return CommitInfo(m["snapshot_id"], 0, 0, applied_range)
-        bucket_count = None
-        if isinstance(schema_id, tuple):
-            schema_id, bucket_count = schema_id
+        schema_id, bucket_count = token
         if schema_id != m["schema_id"]:
             raise CommitConflictError(
                 f"schema advanced ({schema_id} -> {m['schema_id']}) while the "
                 "delta was in flight — re-prepare under the current schema"
             )
-        if bucket_count is not None and bucket_count != m["bucket_count"]:
+        if bucket_count != m["bucket_count"]:
             raise CommitConflictError(
                 f"bucket count rescaled ({bucket_count} -> "
                 f"{m['bucket_count']}) while the delta was in flight — "
@@ -2055,25 +2038,10 @@ class SnapshotTable:
         )
         for b, ents in own_entries.items():
             new_files.setdefault(b, []).extend(ents)
-        ledger = list(m["checkpoint"]["applied"])
-        ledger_row = None
-        if applied_range is not None:
-            ledger_row = [
-                int(applied_range[0]), int(applied_range[1]), new_sid, n_src
-            ]
-            ledger.append(ledger_row)
-        new_m = {
-            **m,
-            "snapshot_id": new_sid,
-            "parent": m["snapshot_id"],
-            "files": new_files,
-            "checkpoint": {**m["checkpoint"], "applied": ledger},
-            "summary": {
-                "operation": "merge_mor_pipelined",
-                "source_rows": n_src,
-                "buckets_rewritten": len(written),
-            },
-        }
+        new_m, ledger_row = self._merge_manifest(
+            m, new_sid, new_files, applied_range, n_src, "merge_mor",
+            len(written),
+        )
         committed, noop = self._commit_manifest(
             new_m,
             on_conflict="rebase" if on_conflict == "retry" else on_conflict,

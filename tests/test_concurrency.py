@@ -267,6 +267,32 @@ class TestStructuralConflicts:
                 on_conflict="rebase",
             )
 
+    def test_mor_retry_reprepares_after_schema_change(self, spark):
+        # the delta was prepared under the old schema; 'retry' writes it
+        # again under the new one instead of raising
+        import pyspark.sql.types as T
+
+        path, t1 = _fresh(spark)
+        t2 = SnapshotTable.load(spark, path)
+        wider = T.StructType(
+            list(transcript_schema().fields)
+            + [T.StructField("extra", T.StringType(), True)]
+        )
+        b = _events(spark, 500, 540, "convB")
+        t2._pre_commit_hook = lambda: t1.alter_schema(wider)
+        ci = t2.merge_cdc(
+            b, applied_range=(500, 540), source_is_raw=True, mode="mor",
+            on_conflict="retry",
+        )
+        assert ci.rows_written == 40
+        m = t2.manifest(refresh=True)
+        assert m["summary"]["operation"] == "merge_mor"
+        assert "extra" in t2.read().columns
+        assert {e["schema_id"] for es in m["files"].values() for e in es} == {
+            m["schema_id"]
+        }
+        assert _state(t2) == _sequential(spark, [(b, (500, 540))])
+
 
 class TestCompactRebase:
     def test_compact_keeps_concurrent_delta(self, spark):

@@ -93,50 +93,76 @@ def test_mor_exactly_once(spark, tmp_path, log_path):
 
 
 def test_pipelined_mor_replay_matches_oracle(spark, tmp_path):
-    """Pipelined MoR: concurrent delta writes + ordered manifest
-    commits reach the same final state as serial replay; the ledger
-    holds every range; resume is a no-op."""
+    """Serial and pipelined MoR replay are one write path: for a
+    full-image log and a partial-image (patch_ops) log, both reach the
+    same final state with the engine's df-level hook applied, the same
+    ledger source-row count per range and the same per-bucket delta
+    entries. Pipelined replay matches the oracle; resume is a no-op."""
     from pyspark.sql import functions as F
 
-    from neosync_spark.engine import EngineConfig, ReplayEngine
-    from neosync_spark.lakehouse import SnapshotTable
-    from neosync_spark.schema import KEY_COLS, transcript_schema
-    from neosync_spark.synth import SynthConfig, expected_final_state, generate_pandas
+    log = generate_pandas(CFG)
+    # every other update becomes a partial image: role/tool unchanged
+    patch_log = log.copy()
+    partial = (patch_log["op"] == "update") & (patch_log["lsn"] % 2 == 0)
+    patch_log.loc[partial, "op"] = "patch"
+    patch_log.loc[partial, ["role", "tool"]] = None
 
-    from .conftest import assert_pdf_equal
+    def upper_text(df):
+        return df.withColumn("text", F.upper("text"))
 
-    log = generate_pandas(SynthConfig(n_events=8_000, n_convs=300))
-    sdf = spark.createDataFrame(log)
-    t = SnapshotTable.create(
-        spark, str(tmp_path / "t"), transcript_schema(), key_cols=KEY_COLS, n_buckets=8
-    )
-    eng = ReplayEngine(
-        spark, t,
-        config=EngineConfig(
-            batch_lsn_size=2_000, merge_mode="mor", prune_buckets=False,
-            compact_deltas_over=None,
-        ),
-    )
+    def replay(name, pdf, pipeline_batches, patch_ops):
+        sdf = spark.createDataFrame(pdf)
+        t = SnapshotTable.create(
+            spark, str(tmp_path / name), transcript_schema(),
+            key_cols=KEY_COLS, n_buckets=8,
+        )
+        eng = ReplayEngine(
+            spark, t, df_transform=upper_text,
+            config=EngineConfig(
+                batch_lsn_size=BATCH, merge_mode="mor",
+                compact_deltas_over=None, patch_ops=patch_ops,
+            ),
+        )
 
-    def slicer(lo, hi):
-        return sdf.filter((F.col("lsn") >= lo) & (F.col("lsn") < hi))
+        def slicer(lo, hi):
+            return sdf.filter((F.col("lsn") >= lo) & (F.col("lsn") < hi))
 
-    stats = eng.replay(slicer, lsn_lo=0, lsn_hi=7_999, pipeline_batches=4)
-    assert stats.batches_applied == 4
-    got = t.read().toPandas()
-    exp = expected_final_state(log)
-    assert_pdf_equal(got, exp, ["conv_id", "turn_idx"])
-    assert len(t.applied_ranges()) == 4
+        stats = eng.replay(
+            slicer, lsn_lo=0, lsn_hi=7_999, pipeline_batches=pipeline_batches
+        )
+        assert stats.batches_applied == 4
+        return t, eng, slicer
+
+    def shape(t):
+        m = t.manifest(refresh=True)
+        n_src = {(r[0], r[1]): r[3] for r in m["checkpoint"]["applied"]}
+        entries = {
+            b: sorted((e["rows"], e.get("kind")) for e in es)
+            for b, es in m["files"].items()
+        }
+        return n_src, entries
+
+    for name, pdf, patch_ops in (("full", log, False), ("patch", patch_log, True)):
+        serial, _, _ = replay(f"{name}_serial", pdf, 1, patch_ops)
+        t, eng, slicer = replay(f"{name}_pipelined", pdf, 4, patch_ops)
+        assert_pdf_equal(
+            t.read().toPandas(), serial.read().toPandas(),
+            ["conv_id", "turn_idx"], msg=f"{name}: pipelined vs serial",
+        )
+        assert shape(t) == shape(serial), name
+        assert len(shape(t)[0]) == 4
+        if not patch_ops:
+            exp = expected_final_state(log)
+            exp["text"] = exp["text"].str.upper()
+            assert_pdf_equal(t.read().toPandas(), exp, ["conv_id", "turn_idx"])
     # resume: everything already applied
     stats2 = eng.replay(slicer, lsn_lo=0, lsn_hi=7_999, pipeline_batches=4)
     assert stats2.batches_applied == 0 and stats2.batches_skipped == 4
     # guard: pipelining requires mor
     eng_cow = ReplayEngine(
-        spark, t, config=EngineConfig(batch_lsn_size=2_000, merge_mode="cow")
+        spark, t, config=EngineConfig(batch_lsn_size=BATCH, merge_mode="cow")
     )
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError, match="mor"):
+    with pytest.raises(ValueError, match="mor"):
         eng_cow.replay(slicer, lsn_lo=0, lsn_hi=7_999, pipeline_batches=4)
 
 

@@ -95,7 +95,7 @@ def main() -> None:
     for i in range(n_pop):
         t.merge_cdc(
             wide_batch(i), applied_range=(i * 100, i * 100 + 100),
-            mode="mor", prune_buckets=False, lineage=False,
+            mode="mor", lineage=False,
         )
 
     per_commit_new = []
@@ -106,7 +106,7 @@ def main() -> None:
         i = n_pop + j
         t.merge_cdc(
             batch(i), applied_range=(i * 100, i * 100 + 100), mode="mor",
-            prune_buckets=False, lineage=False,
+            lineage=False,
         )
         # auto ledger bound, as the engine hook applies it
         if len(t.applied_ranges()) > 2 * 32:

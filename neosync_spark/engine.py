@@ -156,11 +156,13 @@ class ReplayEngine:
         # while assistant/tool turns pass through. SQL strings keep the
         # pandas oracle path usable (it re-evaluates them via DuckDB).
         self.transform_where = transform_where or {}
-        # df-level hook (DataFrame -> DataFrame) applied AFTER the
-        # per-column transforms — for transforms that need row context
-        # beyond one column (e.g. per-subject crypto-shred encryption
-        # joins the key store on conv_id). Must be row-local per key,
-        # like column transforms, so merge semantics are unchanged.
+        # df-level hook ``(df, only_where=None) -> DataFrame`` applied
+        # AFTER the per-column transforms — for transforms that need
+        # row context beyond one column (e.g. per-subject crypto-shred
+        # encryption joins the key store on conv_id). Must be row-local
+        # per key, like column transforms, so merge semantics are
+        # unchanged, and leave rows outside ``only_where`` untouched
+        # (see effective_transform).
         self.df_transform = df_transform
         self.registry = registry
         self.config = config or EngineConfig()
@@ -176,9 +178,7 @@ class ReplayEngine:
         for the key-grouped stage; see operators/dedup.py)."""
         return lww_dedup(batch, KEY_COLS, ["ts", "lsn"])
 
-    def transform_batch(
-        self, batch: DataFrame, only_where=None
-    ) -> DataFrame | None:
+    def transform_batch(self, batch: DataFrame, only_where=None) -> DataFrame:
         """Apply the anonymization transforms to payload columns.
 
         Transformers carrying a ``column_expr`` (deterministic regex /
@@ -204,10 +204,7 @@ class ReplayEngine:
         property the patch path relies on) and the projection restores
         the original value where ``cond`` is false. The Arrow round
         trip then carries null bitmap entries instead of payloads for
-        masked rows, and — decisively — the LWW aggregate runs ONCE,
-        where the previous filter-split-union fallback re-ran the whole
-        aggregation per branch (a full second pass over the merge state
-        every micro-batch)."""
+        masked rows, and the LWW aggregate runs once."""
         if not self.transforms:
             return batch
         out = batch
@@ -243,25 +240,17 @@ class ReplayEngine:
                 out = out.withColumn(col, mapped)
         return out
 
-    def effective_transform(
-        self, batch: DataFrame, only_where=None
-    ) -> DataFrame | None:
-        """Column transforms + the df-level hook, under the same
-        conditional-apply contract as ``transform_batch`` (returning
-        None asks the caller to filter-split; the df-level hook never
-        applies conditionally — it may join, which ``when()`` can't
-        express)."""
-        if only_where is not None and self.df_transform is not None:
-            return None
-        out = (
-            self.transform_batch(batch, only_where)
-            if self.transforms
-            else batch
-        )
-        if out is None:
-            return None
+    def effective_transform(self, batch: DataFrame, only_where=None) -> DataFrame:
+        """Column transforms + the df-level hook, under one
+        conditional-apply contract: with ``only_where`` (a boolean
+        Column) only the rows where it holds are transformed, in one
+        pass, and every other row passes through unchanged — so the
+        df-level hook is called as ``df_transform(df, only_where=...)``
+        and must honour it (``operators.crypto_shred.encrypt_columns``
+        does)."""
+        out = self.transform_batch(batch, only_where)
         if self.df_transform is not None:
-            out = self.df_transform(out)
+            out = self.df_transform(out, only_where=only_where)
         return out
 
     @property
@@ -441,20 +430,14 @@ class ReplayEngine:
                 prev.unpersist()
         n_bad = 0
         if obs is not None:
-            from .lakehouse import observation_metrics
+            from .lakehouse import observed_metric
 
-            got = observation_metrics(obs)
-            if got is not None:
-                n_bad = int(got.get("n_bad") or 0)
-            else:
-                # metric unavailable (cloned foreachBatch session):
-                # recompute over the micro-batch source
-                n_bad = int(
-                    original.agg(
-                        F.sum((~valid).cast("long")).alias("n_bad")
-                    ).collect()[0][0]
-                    or 0
-                )
+            n_bad = observed_metric(
+                obs, "n_bad",
+                lambda: original.agg(
+                    F.sum((~valid).cast("long"))
+                ).collect()[0][0] or 0,
+            )
         if obs is not None and n_bad > 0:
             # rare path: persist the poison rows for inspection instead
             # of failing the batch (reference: row-by-row retry skipping

@@ -2,8 +2,14 @@
 table over parquet, built from scratch (no Iceberg/Delta jars in this
 environment), with the pieces the CDC engine needs:
 
-* atomic commits: data files → manifest json → atomic version-hint swap
-  (``os.replace``), so readers always see a complete snapshot;
+* atomic commits: every snapshot after ``create`` commits through one
+  routine, ``SnapshotTable._commit_child`` → ``_commit_manifest`` →
+  ``_write_manifest``, in one phase order: data files (bucket-routed,
+  ``_write_buckets``) → manifest entries (``_file_entries``) →
+  ``_pre_commit_hook`` → manifest json (exclusive create) → atomic
+  version-hint swap (``os.replace``), so readers always see a complete
+  snapshot and a crash before the swap leaves only orphan files
+  (``vacuum_orphans``);
 * copy-on-write MERGE keyed by (conv_id, turn_idx): only the buckets a
   batch touches are rewritten, untouched buckets' files are carried
   into the new manifest by reference (Iceberg-style COW);
@@ -144,6 +150,16 @@ def observation_metrics(observation, timeout_s: float = 5.0) -> dict | None:
         if time.monotonic() >= deadline:
             return None
         time.sleep(0.05)
+
+
+def observed_metric(observation, name: str, recompute) -> int:
+    """The ``observe()`` metric ``name`` (NULL reads as 0), or
+    ``recompute()`` — one extra job over the observed input — when
+    ``observation_metrics`` cannot read it."""
+    got = observation_metrics(observation)
+    if not got:
+        return int(recompute())
+    return int(got.get(name) or 0)
 
 
 def bucket_expr(key_col: str, n_buckets: int):
@@ -337,6 +353,7 @@ class SnapshotTable:
         path/metadata/snap-<id>.json       -> manifest
         path/metadata/lineage/             -> lineage parquet (append)
         path/data/commit-<id>-<uuid>/_bucket=<k>/part-*.parquet
+        path/data/{delta,retain}-<uuid>/_bucket=<k>/part-*.parquet
     """
 
     def __init__(self, spark: SparkSession, path: str, ref: str = "main"):
@@ -623,9 +640,13 @@ class SnapshotTable:
         max_retries: int = 5,
     ) -> tuple[dict, bool]:
         """Commit ``new_m``; on a concurrent-writer conflict with
-        ``on_conflict='rebase'``, rebase the commit onto the new head
-        (see ``_rebase_manifest``) and retry — the Iceberg
-        optimistic-concurrency loop. Returns ``(manifest, noop)``;
+        ``on_conflict='rebase'`` (or ``'retry'``, which is a rebase at
+        this level — recomputing is the writer's own loop), rebase the
+        commit onto the new head (see ``_rebase_manifest``) and retry —
+        the Iceberg optimistic-concurrency loop. The one-shot
+        ``_pre_commit_hook`` test seam runs first, so every writer has
+        a kill point after its data write and before its manifest.
+        Returns ``(manifest, noop)``;
         ``noop=True`` means a concurrent writer already applied this
         commit's exactly-once range, so nothing was written (this
         commit's data files are orphans, GC-able by expire_snapshots).
@@ -661,6 +682,111 @@ class SnapshotTable:
                 if reb is None:
                     return self.manifest(refresh=True), True
                 new_m = reb
+
+    def _commit_child(
+        self,
+        m: dict,
+        summary: dict,
+        *,
+        sid: int | None = None,
+        parent: int | None = None,
+        applied_range: tuple[int, int] | None = None,
+        n_src: int = 0,
+        on_conflict: str = "fail",
+        kind: str = "rewrite",
+        own_entries: dict | None = None,
+        replaced_paths: dict | None = None,
+        **fields,
+    ) -> tuple[dict, bool]:
+        """Commit the child of snapshot ``m`` — every snapshot after
+        ``create`` is built here. ``fields`` are the table-level fields
+        the commit changes (``files``, ``bucket_count``, ``stats_cols``,
+        ``schema_id``/``schemas``, ``transform_version``,
+        ``checkpoint`` …); ``applied_range`` appends the exactly-once
+        ledger row ``[lo, hi, sid, n_src]``. ``sid`` is the id the
+        commit's data files and bloom sidecar were named after
+        (default: the next free id); ``parent`` defaults to ``m``
+        itself (a rollback restores an older ``m`` on top of the head).
+        Conflict policy and rebase inputs go to ``_commit_manifest``;
+        returns its ``(manifest, noop)``."""
+        sid = self._next_snapshot_id() if sid is None else sid
+        ledger_row = None
+        if applied_range is not None:
+            ledger_row = [int(applied_range[0]), int(applied_range[1]), sid, n_src]
+            fields["checkpoint"] = {
+                **m["checkpoint"],
+                "applied": [*m["checkpoint"]["applied"], ledger_row],
+            }
+        child = {
+            **m,
+            **fields,
+            "snapshot_id": sid,
+            "parent": m["snapshot_id"] if parent is None else parent,
+            "summary": summary,
+        }
+        return self._commit_manifest(
+            child,
+            on_conflict=on_conflict,
+            kind=kind,
+            own_entries=own_entries,
+            replaced_paths=replaced_paths,
+            ledger_row=ledger_row,
+        )
+
+    def _write_buckets(
+        self, out: DataFrame, prefix: str, max_records_per_file: int | None = None
+    ) -> dict[int, list[str]]:
+        """Write bucket-routed rows (``_BUCKET_COL`` included) to a
+        fresh ``data/<prefix>-<uuid>/_bucket=<k>/`` directory and list
+        the files per bucket. Callers route (``bucket_routed``) and may
+        sort or persist first; this is the only data write."""
+        commit_dir = os.path.join(
+            self.path, "data", f"{prefix}-{uuid.uuid4().hex[:12]}"
+        )
+        writer = out.write
+        if max_records_per_file:
+            writer = writer.option("maxRecordsPerFile", int(max_records_per_file))
+        writer.partitionBy(_BUCKET_COL).parquet(commit_dir)
+        found: dict[int, list[str]] = {}
+        for entry in os.listdir(commit_dir):
+            if not entry.startswith(f"{_BUCKET_COL}="):
+                continue
+            d = os.path.join(commit_dir, entry)
+            files = [
+                os.path.join(d, f) for f in os.listdir(d) if f.endswith(".parquet")
+            ]
+            if files:
+                found[int(entry.split("=", 1)[1])] = files
+        return found
+
+    def _replace_buckets(
+        self,
+        m: dict,
+        sid: int,
+        entries: dict[str, list[dict]],
+        buckets,
+        summary: dict,
+        **commit,
+    ) -> tuple[dict, bool]:
+        """Commit ``entries`` (bucket → new file entries, from
+        ``_file_entries``) as the whole file lists of ``buckets``: every
+        entry those buckets held in ``m`` is replaced (deltas fold into
+        the rewrite) and a bucket left without entries drops out. The
+        replaced paths and the new entries are what a conflict rebase
+        re-applies on a newer head (``kind='rewrite'``). ``commit``
+        passes through to ``_commit_child`` (ledger range, conflict
+        policy, changed table fields)."""
+        own = {**{str(b): [] for b in buckets}, **entries}
+        replaced = {
+            str(b): {e["path"] for e in m["files"].get(str(b), [])}
+            for b in buckets
+        }
+        files = {b: v for b, v in m["files"].items() if b not in replaced}
+        files.update((b, v) for b, v in own.items() if v)
+        return self._commit_child(
+            m, summary, sid=sid, files=files, kind="rewrite",
+            own_entries=own, replaced_paths=replaced, **commit,
+        )
 
     def _rebase_manifest(
         self,
@@ -1087,12 +1213,11 @@ class SnapshotTable:
         cur = self.manifest(refresh=True)
         if snapshot_id == cur["snapshot_id"]:
             return int(cur["snapshot_id"])
-        new_m = json.loads(json.dumps(target))  # deep copy
-        new_m["snapshot_id"] = self._next_snapshot_id()
-        new_m["parent"] = cur["snapshot_id"]
-        new_m["summary"] = {"operation": "rollback", "to": int(snapshot_id)}
-        self._write_manifest(new_m)
-        return int(new_m["snapshot_id"])
+        committed, _ = self._commit_child(
+            target, {"operation": "rollback", "to": int(snapshot_id)},
+            parent=cur["snapshot_id"],
+        )
+        return int(committed["snapshot_id"])
 
     def identity_high_water(self, col: str) -> int | None:
         """Max of ``col`` over the CURRENT snapshot — the post-sync
@@ -1559,8 +1684,14 @@ class SnapshotTable:
         hold many events per key and is not yet anonymized — the stats
         pre-pass then runs on the cheap raw scan (no UDFs), in-batch
         dedup folds into the merge's single LWW shuffle, and
-        ``transform`` (df → df) is applied ONLY to the winning source
-        rows, inside the key-partitioned merge stage. With the default
+        ``transform`` is applied ONLY to the winning source rows,
+        inside the key-partitioned merge stage. Its contract is
+        ``transform(df, only_where=None) -> df``: under COW with a
+        non-empty target the merge passes ``only_where`` (the winning
+        source rows) and every other row must come back unchanged, in
+        one pass over the LWW aggregate (``ReplayEngine.
+        effective_transform`` and ``transform_batch`` honour it). The
+        MoR, patch and repair paths call ``transform(df)``. With the default
         (False) the caller provides a key-unique, already-transformed
         batch, which COW persists to avoid recomputing it twice.
 
@@ -1712,19 +1843,12 @@ class SnapshotTable:
                 won = lww_dedup(unioned, key_cols, ["ts", _LSN_COL, "_src"])
             if transform is not None and not patch_ops:
                 # anonymize ONLY the winning source rows (target rows
-                # were transformed when first applied). Preferred
-                # plan: one conditional projection over the agg
-                # output (engine.transform_batch(only_where=...)) —
-                # a filter-split-union re-runs the LWW aggregation
-                # once PER BRANCH (the shuffle is reused, the agg is
-                # not). Fall back to the split for df→df transforms
-                # that can't apply conditionally (Python-UDF
-                # transformers, ad-hoc test callables) — unless the
-                # target contributed nothing (bootstrap / bulk load
-                # into empty buckets, known metadata-only): every
-                # winner is then a source row and the transform
-                # applies unconditionally in one pass, skipping the
-                # duplicated aggregation entirely.
+                # were transformed when first applied): one conditional
+                # projection over the agg output, so the LWW
+                # aggregation runs once. If the target contributed
+                # nothing (bootstrap / bulk load into empty buckets,
+                # known metadata-only) every winner is a source row and
+                # the transform applies unconditionally.
                 target_empty = target_df is None and not any(
                     m["files"].get(str(b))
                     for b in (affected if affected is not None
@@ -1733,80 +1857,39 @@ class SnapshotTable:
                 if target_empty:
                     won = transform(won)
                 else:
-                    cond_res = None
-                    try:
-                        cond_res = transform(
-                            won, only_where=F.col("_src") == 1
-                        )
-                    except TypeError:
-                        cond_res = None
-                    if cond_res is not None:
-                        won = cond_res
-                    else:
-                        new_rows = transform(won.filter(F.col("_src") == 1))
-                        kept_rows = won.filter(F.col("_src") != 1)
-                        won = new_rows.unionByName(kept_rows)
+                    won = transform(won, only_where=F.col("_src") == 1)
 
             out = self._finalize_rows(won, cur, key_cols)
 
             new_sid = self._next_snapshot_id()
-            commit_dir = os.path.join(
-                self.path, "data", f"commit-{new_sid}-{uuid.uuid4().hex[:8]}"
-            )
-            already_bucket_partitioned = bucket_local_merge and not patch_ops
-            if not already_bucket_partitioned:
+            if not (bucket_local_merge and not patch_ops):
                 # exact bucket→partition routing (no multinomial
-                # collisions / empty write slots — see bucket_routed)
+                # collisions / empty write slots — see bucket_routed);
+                # the bucket-local plan is bucket-partitioned already
                 w_buckets = affected if affected is not None else range(nb)
                 out = bucket_routed(
                     out, w_buckets, 256, bucket_col=_BUCKET_COL
                 )
             if chain_state:
                 out = out.persist()
-            out.write.partitionBy(_BUCKET_COL).parquet(commit_dir)
-
-            written = self._list_commit_files(commit_dir)
-            # own_entries / replaced_paths drive BOTH the normal manifest
-            # build and a conflict rebase (_rebase_manifest). Fresh data
-            # is written by the CURRENT anonymization policy (the
-            # engine's transforms run inside this merge).
+            written = self._write_buckets(out, f"commit-{new_sid}")
+            # fresh data is written by the CURRENT anonymization policy
+            # (the engine's transforms run inside this merge)
             own_entries = self._file_entries(
                 m, new_sid, written, int(m.get("transform_version", 0))
             )
             if affected is None:  # no-prepass mode: stats post-hoc
                 affected = sorted(written)
-                got = observation_metrics(observation)
-                # metric unavailable (cloned foreachBatch session):
-                # recompute over the micro-batch source
-                n_src = int(got["n_src"]) if got else src.count()
+                n_src = observed_metric(observation, "n_src", src.count)
                 bucket_counts = _bucket_rows(own_entries)
-            rewritten = affected if prune_buckets else [
-                int(b) for b in m["files"]
-            ]
-            own_entries = {**{str(b): [] for b in rewritten}, **own_entries}
-            replaced = {
-                str(b): {e["path"] for e in m["files"].get(str(b), [])}
-                for b in rewritten
-            }
-
-            new_files = {b: list(v) for b, v in m["files"].items()}
-            for b in replaced:
-                new_files.pop(b, None)
-            for b, ents in own_entries.items():
-                if ents:
-                    new_files[b] = ents
-
-            new_m, ledger_row = self._merge_manifest(
-                m, new_sid, new_files, applied_range, n_src, "merge_cow",
-                len(affected),
-            )
             try:
-                committed, noop = self._commit_manifest(
-                    new_m,
-                    on_conflict="rebase" if on_conflict == "retry" else on_conflict,
-                    own_entries=own_entries,
-                    replaced_paths=replaced,
-                    ledger_row=ledger_row,
+                committed, noop = self._replace_buckets(
+                    m, new_sid, own_entries,
+                    affected if prune_buckets else list(m["files"]),
+                    {"operation": "merge_cow", "source_rows": n_src,
+                     "buckets_rewritten": len(affected)},
+                    applied_range=applied_range, n_src=n_src,
+                    on_conflict=on_conflict,
                 )
             except CommitConflictError:
                 if on_conflict != "retry" or _retry_budget <= 0:
@@ -1911,25 +1994,6 @@ class SnapshotTable:
         )
 
     @staticmethod
-    def _merge_manifest(m, new_sid, new_files, applied_range, n_src, op, n_buckets):
-        """The manifest a merge commits on top of ``m``, and the ledger
-        row it adds for ``applied_range`` (None without a range)."""
-        ledger = list(m["checkpoint"]["applied"])
-        ledger_row = None
-        if applied_range is not None:
-            ledger_row = [int(applied_range[0]), int(applied_range[1]), new_sid, n_src]
-            ledger.append(ledger_row)
-        summary = {"operation": op, "source_rows": n_src, "buckets_rewritten": n_buckets}
-        return {
-            **m,
-            "snapshot_id": new_sid,
-            "parent": m["snapshot_id"],
-            "files": new_files,
-            "checkpoint": {**m["checkpoint"], "applied": ledger},
-            "summary": summary,
-        }, ledger_row
-
-    @staticmethod
     def _check_cdc_batch(batch, key_cols, source_is_raw, patch_ops) -> None:
         """Reject a batch no merge can apply: missing op/lsn/ts/key
         columns, or partial images without the raw event history."""
@@ -1984,13 +2048,10 @@ class SnapshotTable:
         if transform is not None:
             won = transform(won)
         out = self._finalize_rows(won, cur, key_cols, include_patch=patch_ops)
-        commit_dir = os.path.join(self.path, "data", f"delta-{uuid.uuid4().hex[:12]}")
-        bucket_routed(out, range(nb), 256, bucket_col=_BUCKET_COL).write.partitionBy(
-            _BUCKET_COL
-        ).parquet(commit_dir)
-        written = self._list_commit_files(commit_dir)
-        got = observation_metrics(obs)
-        n_src = int(got["n_src"]) if got else src.count()
+        written = self._write_buckets(
+            bucket_routed(out, range(nb), 256, bucket_col=_BUCKET_COL), "delta"
+        )
+        n_src = observed_metric(obs, "n_src", src.count)
         return written, n_src, (m["schema_id"], nb)
 
     def commit_delta(
@@ -2028,7 +2089,6 @@ class SnapshotTable:
                 "the files are bucketed under the old layout; re-prepare"
             )
         new_sid = self._next_snapshot_id()
-        new_files = {b: list(v) for b, v in m["files"].items()}
         # bloom build launches one Spark job inside the serialized
         # metadata step; with pipelined commits prefer building it in
         # the data plane if it ever dominates — gated on bloom_cols
@@ -2036,18 +2096,16 @@ class SnapshotTable:
             m, new_sid, written, int(m.get("transform_version", 0)),
             kind="delta",
         )
+        new_files = {b: list(v) for b, v in m["files"].items()}
         for b, ents in own_entries.items():
             new_files.setdefault(b, []).extend(ents)
-        new_m, ledger_row = self._merge_manifest(
-            m, new_sid, new_files, applied_range, n_src, "merge_mor",
-            len(written),
-        )
-        committed, noop = self._commit_manifest(
-            new_m,
-            on_conflict="rebase" if on_conflict == "retry" else on_conflict,
-            kind="append",
-            own_entries=own_entries,
-            ledger_row=ledger_row,
+        committed, noop = self._commit_child(
+            m,
+            {"operation": "merge_mor", "source_rows": n_src,
+             "buckets_rewritten": len(written)},
+            sid=new_sid, files=new_files,
+            applied_range=applied_range, n_src=n_src,
+            on_conflict=on_conflict, kind="append", own_entries=own_entries,
         )
         if noop:
             return CommitInfo(committed["snapshot_id"], 0, 0, applied_range)
@@ -2489,22 +2547,6 @@ class SnapshotTable:
                 ex.map(lambda p: (p, pq.ParquetFile(p).metadata), paths)
             )
 
-    def _list_commit_files(self, commit_dir: str) -> dict[int, list[str]]:
-        found: dict[int, list[str]] = {}
-        for entry in os.listdir(commit_dir):
-            if not entry.startswith(f"{_BUCKET_COL}="):
-                continue
-            b = int(entry.split("=", 1)[1])
-            d = os.path.join(commit_dir, entry)
-            files = [
-                os.path.join(d, f)
-                for f in os.listdir(d)
-                if f.endswith(".parquet")
-            ]
-            if files:
-                found[b] = files
-        return found
-
     def _write_lineage(
         self,
         bucket_counts: dict[int, int],
@@ -2690,9 +2732,6 @@ class SnapshotTable:
             _BUCKET_COL, bucket_expr(m["key_cols"][0], m["bucket_count"])
         )
         new_sid = self._next_snapshot_id()
-        commit_dir = os.path.join(
-            self.path, "data", f"commit-{new_sid}-{uuid.uuid4().hex[:8]}"
-        )
         out = bucket_routed(out, buckets, 256, bucket_col=_BUCKET_COL)
         persisted = None
         stats_cols = self._stats_cols(m)
@@ -2719,52 +2758,28 @@ class SnapshotTable:
                 persisted = out = out.persist()
                 z = zorder_sort_key(out, list(zorder_cols), zorder_bits)
                 out = out.sortWithinPartitions(F.col(_BUCKET_COL), z)
-            writer = out.write
-            if max_records_per_file:
-                writer = writer.option("maxRecordsPerFile", int(max_records_per_file))
-            writer.partitionBy(_BUCKET_COL).parquet(commit_dir)
+            written = self._write_buckets(
+                out, f"commit-{new_sid}", max_records_per_file
+            )
         finally:
             # release even when the sort-key build or write throws (a
             # string --zorder column, a full disk): the cached read is
             # the whole targeted bucket set
             if persisted is not None:
                 persisted.unpersist()
-        own_entries = {
-            **{str(b): [] for b in buckets},
-            **self._file_entries(
-                m, new_sid, self._list_commit_files(commit_dir),
-                m["files"] if tag_transform_version is None
-                else int(tag_transform_version),
-                stats_cols=stats_cols,
-            ),
-        }
-        # the fold consumed every entry of the targeted buckets at this
-        # snapshot — a rebase must see them all still live at the head
-        replaced = {
-            str(b): {e["path"] for e in m["files"].get(str(b), [])}
-            for b in buckets
-        }
-        new_files = {b: list(v) for b, v in m["files"].items()}
-        for b in replaced:
-            new_files.pop(b, None)
-        for b, ents in own_entries.items():
-            if ents:
-                new_files[b] = ents
-        new_m = {
-            **m,
-            "snapshot_id": new_sid,
-            "parent": m["snapshot_id"],
-            "files": new_files,
-            "stats_cols": stats_cols,
-            "summary": {"operation": "compact", "buckets": len(buckets)},
-        }
+        entries = self._file_entries(
+            m, new_sid, written,
+            m["files"] if tag_transform_version is None
+            else int(tag_transform_version),
+            stats_cols=stats_cols,
+        )
         try:
-            committed, _ = self._commit_manifest(
-                new_m,
-                on_conflict="rebase" if on_conflict == "retry" else on_conflict,
-                kind="rewrite",
-                own_entries=own_entries,
-                replaced_paths=replaced,
+            # the fold consumed every entry of the targeted buckets at
+            # this snapshot — a rebase must see them all still live
+            committed, _ = self._replace_buckets(
+                m, new_sid, entries, buckets,
+                {"operation": "compact", "buckets": len(buckets)},
+                stats_cols=stats_cols, on_conflict=on_conflict,
             )
         except CommitConflictError:
             if on_conflict != "retry" or _retry_budget <= 0:
@@ -2809,19 +2824,13 @@ class SnapshotTable:
             )
         if int(version) == cur:
             return m["snapshot_id"]
-        new_sid = self._next_snapshot_id()
-        new_m = {
-            **m,
-            "snapshot_id": new_sid,
-            "parent": m["snapshot_id"],
-            "transform_version": int(version),
-            "summary": {
-                "operation": "set_transform_version",
-                "transform_version": int(version),
-            },
-        }
-        self._write_manifest(new_m)
-        return new_sid
+        committed, _ = self._commit_child(
+            m,
+            {"operation": "set_transform_version",
+             "transform_version": int(version)},
+            transform_version=int(version),
+        )
+        return committed["snapshot_id"]
 
     def pending_transform_buckets(self, version: int | None = None) -> list[int]:
         """Buckets holding at least one file whose transform-version
@@ -2974,61 +2983,31 @@ class SnapshotTable:
             from pyspark.sql import Observation
 
             rows = self.read(buckets=affected, internal=True)
-            obs_all = Observation()
-            rows = rows.observe(obs_all, F.count(F.lit(1)).alias("n_before"))
-            keep = rows.filter(~F.col(key_col).isin(values))
             obs = Observation()
-            keep = keep.observe(obs, F.count(F.lit(1)).alias("n_keep"))
-            out = keep.withColumn(_BUCKET_COL, bucket_expr(key_col, nb))
-            new_sid = self._next_snapshot_id()
-            commit_dir = os.path.join(
-                self.path, "data", f"commit-{new_sid}-{uuid.uuid4().hex[:8]}"
+            rows = rows.observe(obs, F.count(F.lit(1)).alias("n_before"))
+            out = rows.filter(~F.col(key_col).isin(values)).withColumn(
+                _BUCKET_COL, bucket_expr(key_col, nb)
             )
-            out = bucket_routed(out, affected, 256, bucket_col=_BUCKET_COL)
-            out.write.partitionBy(_BUCKET_COL).parquet(commit_dir)
-            new_files = {b: list(v) for b, v in m["files"].items()}
-            for b in affected:
-                new_files[str(b)] = []  # deltas fold into the rewrite
+            new_sid = self._next_snapshot_id()
+            written = self._write_buckets(
+                bucket_routed(out, affected, 256, bucket_col=_BUCKET_COL),
+                f"commit-{new_sid}",
+            )
             # fresh blooms for the rewritten files: the subjects' keys
             # are gone from the data, so they're absent from the new
             # bits too; the old sidecars die with expire_snapshots' GC
-            entries = self._file_entries(
-                m, new_sid, self._list_commit_files(commit_dir), m["files"]
+            entries = self._file_entries(m, new_sid, written, m["files"])
+            # kept rows = the new files' footer counts (exact)
+            purged_rows = observed_metric(
+                obs, "n_before",
+                lambda: self.read(buckets=affected, internal=True).count(),
+            ) - sum(_bucket_rows(entries).values())
+            committed, _ = self._replace_buckets(
+                m, new_sid, entries, affected,
+                {"operation": "purge", "buckets": len(affected),
+                 "purged_rows": purged_rows},
             )
-            new_files.update(entries)
-            new_files = {b: v for b, v in new_files.items() if v}
-            # hardened metric reads: the blocking Observation.get can
-            # surface a schema-less metrics row on Spark 4.1 (the same
-            # failure class observation_metrics guards against) — fall
-            # back to exact recomputes: kept rows from the new entries'
-            # footer counts (no job), the before-count from one job
-            # over the affected buckets
-            got_all = observation_metrics(obs_all)
-            got_keep = observation_metrics(obs)
-            n_keep = (
-                int(got_keep["n_keep"])
-                if got_keep is not None
-                else sum(_bucket_rows(entries).values())
-            )
-            n_before = (
-                int(got_all["n_before"])
-                if got_all is not None
-                else self.read(buckets=affected, internal=True).count()
-            )
-            purged_rows = n_before - n_keep
-            new_m = {
-                **m,
-                "snapshot_id": new_sid,
-                "parent": m["snapshot_id"],
-                "files": new_files,
-                "summary": {
-                    "operation": "purge",
-                    "buckets": len(affected),
-                    "purged_rows": purged_rows,
-                },
-            }
-            self._write_manifest(new_m)
-            info = CommitInfo(new_sid, 0, len(affected), None)
+            info = CommitInfo(committed["snapshot_id"], 0, len(affected), None)
 
         scrubbed = 0
         if scrub_quarantine:
@@ -3106,36 +3085,26 @@ class SnapshotTable:
             _BUCKET_COL, bucket_expr(m["key_cols"][0], new_bucket_count)
         )
         new_sid = self._next_snapshot_id()
-        commit_dir = os.path.join(
-            self.path, "data", f"commit-{new_sid}-{uuid.uuid4().hex[:8]}"
+        written = self._write_buckets(
+            bucket_routed(
+                out, range(new_bucket_count), 256, bucket_col=_BUCKET_COL
+            ),
+            f"commit-{new_sid}",
+            max_records_per_file,
         )
-        out = bucket_routed(
-            out, range(new_bucket_count), 256, bucket_col=_BUCKET_COL
-        )
-        writer = out.write
-        if max_records_per_file:
-            writer = writer.option("maxRecordsPerFile", int(max_records_per_file))
-        writer.partitionBy(_BUCKET_COL).parquet(commit_dir)
         # rows changed buckets: the only sound per-file floor is the
         # min over EVERYTHING the rescale consumed
-        new_files = self._file_entries(
-            m, new_sid, self._list_commit_files(commit_dir),
+        entries = self._file_entries(
+            m, new_sid, written,
             _min_tv([e for ents in m["files"].values() for e in ents]),
         )
-        new_m = {
-            **m,
-            "snapshot_id": new_sid,
-            "parent": m["snapshot_id"],
-            "bucket_count": int(new_bucket_count),
-            "files": new_files,
-            "summary": {
-                "operation": "rescale",
-                "from_buckets": m["bucket_count"],
-                "to_buckets": int(new_bucket_count),
-            },
-        }
-        self._write_manifest(new_m)
-        return CommitInfo(new_sid, 0, len(new_files), None)
+        committed, _ = self._replace_buckets(
+            m, new_sid, entries, list(m["files"]),
+            {"operation": "rescale", "from_buckets": m["bucket_count"],
+             "to_buckets": int(new_bucket_count)},
+            bucket_count=int(new_bucket_count),
+        )
+        return CommitInfo(committed["snapshot_id"], 0, len(entries), None)
 
     def verify_files(self, deep: bool = True) -> dict:
         """Distributed storage audit — the ``fsck`` of the table.
@@ -3328,13 +3297,9 @@ class SnapshotTable:
         key_cols = m["key_cols"]
         cur = self.current_schema(m)
         ranges = [(lo, hi) for (lo, hi, _sid, _n) in self.applied_ranges()]
-
-        new_files = {
-            b: v for b, v in m["files"].items() if int(b) not in set(buckets)
-        }
         new_sid = self._next_snapshot_id()
 
-        bucket_counts: dict[int, int] = {}
+        entries: dict[str, list[dict]] = {}
         if ranges:
             src = log_df.filter(
                 bucket_expr(key_cols[0], nb).isin([int(b) for b in buckets])
@@ -3377,36 +3342,24 @@ class SnapshotTable:
                 if transform is not None:
                     won = transform(won)
             out = self._finalize_rows(won, cur, key_cols)
-            commit_dir = os.path.join(
-                self.path, "data", f"commit-{new_sid}-{uuid.uuid4().hex[:8]}"
+            written = self._write_buckets(
+                bucket_routed(out, buckets, 256, bucket_col=_BUCKET_COL),
+                f"commit-{new_sid}",
             )
-            out = bucket_routed(out, buckets, 256, bucket_col=_BUCKET_COL)
-            out.write.partitionBy(_BUCKET_COL).parquet(commit_dir)
             # rebuilt from the log through the CURRENT transform
             entries = self._file_entries(
-                m, new_sid, self._list_commit_files(commit_dir),
-                int(m.get("transform_version", 0)),
+                m, new_sid, written, int(m.get("transform_version", 0))
             )
-            new_files.update(entries)
-            bucket_counts = _bucket_rows(entries)
-        new_files = {b: v for b, v in new_files.items() if v}
+        bucket_counts = _bucket_rows(entries)
         n_out = sum(bucket_counts.values())
-
-        new_m = {
-            **m,
-            "snapshot_id": new_sid,
-            "parent": m["snapshot_id"],
-            "files": new_files,
-            "summary": {
-                "operation": "repair",
-                "buckets": len(buckets),
-                "rows_rederived": n_out,
-            },
-        }
+        committed, _ = self._replace_buckets(
+            m, new_sid, entries, buckets,
+            {"operation": "repair", "buckets": len(buckets),
+             "rows_rederived": n_out},
+        )
         if bucket_counts:
-            self._write_lineage(bucket_counts, new_sid, None)
-        self._write_manifest(new_m)
-        return CommitInfo(new_sid, n_out, len(buckets), None)
+            self._write_lineage(bucket_counts, committed["snapshot_id"], None)
+        return CommitInfo(committed["snapshot_id"], n_out, len(buckets), None)
 
     def expire_rows(
         self,
@@ -3505,77 +3458,48 @@ class SnapshotTable:
         # per storage-schema/kind group, never the whole bucket.
         rewritten_entries: dict[str, list[dict]] = {}
         new_sid = self._next_snapshot_id()
-        if straddlers:
-            groups: dict[tuple, dict[str, list[str]]] = {}
-            for b, ents in straddlers.items():
-                for e in ents:
-                    k = (e.get("schema_id", m["schema_id"]),
-                         e.get("kind"))
-                    groups.setdefault(k, {}).setdefault(b, []).append(
-                        e["path"]
-                    )
-            commit_dir = os.path.join(
-                self.path, "data", f"retain-{uuid.uuid4().hex[:12]}"
+        groups: dict[tuple, dict[str, list[str]]] = {}
+        for b, ents in straddlers.items():
+            for e in ents:
+                k = (e.get("schema_id", m["schema_id"]), e.get("kind"))
+                groups.setdefault(k, {}).setdefault(b, []).append(e["path"])
+        for (schema_id, kind), by_bucket in sorted(
+            groups.items(), key=lambda kv: (kv[0][0], kv[0][1] or "")
+        ):
+            paths = [p for ps in by_bucket.values() for p in ps]
+            df = (
+                self.spark.read.schema(
+                    self._storage_schema(m["schemas"][str(schema_id)])
+                )
+                .parquet(*paths)
+                .filter(F.col(ts_col) >= _ts_instant_lit(before))
+                .withColumn(_BUCKET_COL, bucket_expr(m["key_cols"][0], nb))
             )
-            part = 0
-            for (schema_id, kind), by_bucket in sorted(
-                groups.items(), key=lambda kv: (kv[0][0], kv[0][1] or "")
-            ):
-                paths = [p for ps in by_bucket.values() for p in ps]
-                sschema = self._storage_schema(
-                    m["schemas"][str(schema_id)]
-                )
-                df = (
-                    self.spark.read.schema(sschema)
-                    .parquet(*paths)
-                    .filter(F.col(ts_col) >= _ts_instant_lit(before))
-                    .withColumn(
-                        _BUCKET_COL, bucket_expr(m["key_cols"][0], nb)
-                    )
-                )
-                gdir = os.path.join(commit_dir, f"g{part}")
-                part += 1
-                bucket_routed(
-                    df, by_bucket, 256, bucket_col=_BUCKET_COL
-                ).write.partitionBy(_BUCKET_COL).parquet(gdir)
-                for b, ents in self._file_entries(
-                    m, new_sid, self._list_commit_files(gdir), straddlers,
-                    kind=kind, schema_id=schema_id,
-                ).items():
-                    rewritten_entries.setdefault(b, []).extend(ents)
+            written = self._write_buckets(
+                bucket_routed(df, by_bucket, 256, bucket_col=_BUCKET_COL),
+                "retain",
+            )
+            for b, ents in self._file_entries(
+                m, new_sid, written, straddlers, kind=kind, schema_id=schema_id,
+            ).items():
+                rewritten_entries.setdefault(b, []).extend(ents)
 
         if drop_entries or straddlers:
-            new_files = {b: list(v) for b, v in m["files"].items()}
+            # each touched bucket's new list: the entries neither
+            # dropped nor rewritten, then the rewritten files
             own_entries: dict[str, list[dict]] = {}
-            replaced: dict[str, set[str]] = {}
-            for b in set(drop_entries) | set(straddlers):
+            for b in sorted(set(drop_entries) | set(straddlers)):
                 gone = {e["path"] for e in drop_entries.get(b, ())}
                 gone |= {e["path"] for e in straddlers.get(b, ())}
-                kept = [e for e in m["files"][b] if e["path"] not in gone]
-                kept += rewritten_entries.get(b, [])
-                own_entries[b] = kept
-                replaced[b] = {e["path"] for e in m["files"][b]}
-                if kept:
-                    new_files[b] = kept
-                else:
-                    new_files.pop(b)
-            new_m = {
-                **m,
-                "snapshot_id": new_sid,
-                "parent": m["snapshot_id"],
-                "files": new_files,
-                "summary": {
-                    "operation": "retention",
-                    "files_dropped": report["files_dropped_meta"],
-                    "files_rewritten": report["files_rewritten"],
-                },
-            }
-            committed, _ = self._commit_manifest(
-                new_m,
-                on_conflict="rebase" if on_conflict == "retry" else on_conflict,
-                kind="rewrite",
-                own_entries=own_entries,
-                replaced_paths=replaced,
+                own_entries[b] = [
+                    e for e in m["files"][b] if e["path"] not in gone
+                ] + rewritten_entries.get(b, [])
+            committed, _ = self._replace_buckets(
+                m, new_sid, own_entries, list(own_entries),
+                {"operation": "retention",
+                 "files_dropped": report["files_dropped_meta"],
+                 "files_rewritten": report["files_rewritten"]},
+                on_conflict=on_conflict,
             )
             report["snapshot_ids"].append(committed["snapshot_id"])
         if fallback_buckets:
@@ -3644,11 +3568,6 @@ class SnapshotTable:
                         removed_files += 1
                 if not os.listdir(bdir):
                     os.rmdir(bdir)
-            if all(
-                not os.path.isdir(os.path.join(cdir, d)) or not os.listdir(os.path.join(cdir, d))
-                for d in os.listdir(cdir)
-            ) and not any(x.startswith(_BUCKET_COL) and os.listdir(os.path.join(cdir, x)) for x in os.listdir(cdir) if os.path.isdir(os.path.join(cdir, x))):
-                pass  # leave commit dir skeletons; harmless
 
         # bloom sidecars referenced by no retained snapshot: after a
         # purge this also erases the bits derived from the subjects'
@@ -3890,22 +3809,15 @@ class SnapshotTable:
         squashed = [
             [s[0], s[1], sid_max[s], rows_sum[s]] for s in spans
         ]
-        new_sid = self._next_snapshot_id()
-        new_m = {
-            **m,
-            "snapshot_id": new_sid,
-            "parent": m["snapshot_id"],
-            "checkpoint": {"compacted": squashed, "applied": recent},
-            "summary": {
-                "operation": "ledger_compact",
-                "rows_before": total,
-                "rows_after": len(squashed) + len(recent),
-            },
-        }
-        self._commit_manifest(new_m)
-        return {"rows_before": total,
-                "rows_after": len(squashed) + len(recent),
-                "snapshot_id": new_sid}
+        rows_after = len(squashed) + len(recent)
+        committed, _ = self._commit_child(
+            m,
+            {"operation": "ledger_compact", "rows_before": total,
+             "rows_after": rows_after},
+            checkpoint={"compacted": squashed, "applied": recent},
+        )
+        return {"rows_before": total, "rows_after": rows_after,
+                "snapshot_id": committed["snapshot_id"]}
 
     # ---------- schema evolution ----------
 
@@ -3933,24 +3845,19 @@ class SnapshotTable:
         retired = set(m.get("retired_cols", []))
         _validate_evolution(cur, new_schema, renames, protected, retired)
         new_schema_id = max(int(k) for k in m["schemas"]) + 1
-        new_sid = self._next_snapshot_id()
         cur_names = {f.name for f in cur.fields}
         new_names = {f.name for f in new_schema.fields}
         dropped = cur_names - new_names - set(renames.values())
-        newly_retired = sorted(retired | dropped | set(renames.values()))
-        new_m = {
-            **m,
-            "snapshot_id": new_sid,
-            "parent": m["snapshot_id"],
-            "schema_id": new_schema_id,
-            "schemas": {**m["schemas"], str(new_schema_id): new_schema.jsonValue()},
+        committed, _ = self._commit_child(
+            m,
+            {"operation": "alter_schema"},
+            schema_id=new_schema_id,
+            schemas={**m["schemas"], str(new_schema_id): new_schema.jsonValue()},
             # cumulative rename chain: current name -> name at write time
-            "renames": {**m.get("renames", {}), **renames},
-            "retired_cols": newly_retired,
-            "summary": {"operation": "alter_schema"},
-        }
-        self._write_manifest(new_m)
-        return new_sid
+            renames={**m.get("renames", {}), **renames},
+            retired_cols=sorted(retired | dropped | set(renames.values())),
+        )
+        return committed["snapshot_id"]
 
     def delete_where(self, condition) -> CommitInfo:
         """Predicate DML (Delta ``DELETE FROM t WHERE ...`` analog):

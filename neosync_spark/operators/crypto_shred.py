@@ -169,29 +169,33 @@ def encrypt_columns(
     keys: DataFrame,
     subject_col: str,
     cols: Sequence[str],
+    only_where=None,
 ) -> DataFrame:
     """Replace each of ``cols`` with base64(AES-256-GCM ciphertext).
 
     NULL plaintext stays NULL (no ciphertext leaks presence). Output
     schema keeps the column names (string, base64) so the encrypted
-    table round-trips through parquet/CDC unchanged.
+    table round-trips through parquet/CDC unchanged. With
+    ``only_where`` (a boolean Column) only the rows where it holds are
+    encrypted; the rest keep their value (the merge passes its
+    already-stored target rows through this way).
     """
     joined = df.join(
         keys.withColumnRenamed("subject", subject_col), subject_col, "left"
     )
     out = joined
     for c in cols:
-        out = out.withColumn(
-            c,
-            F.when(
-                F.col(c).isNotNull() & F.col("key").isNotNull(),
-                F.base64(
-                    F.aes_encrypt(
-                        F.col(c), F.col("key").cast("binary"), F.lit(_MODE)
-                    )
-                ),
+        enc = F.when(
+            F.col(c).isNotNull() & F.col("key").isNotNull(),
+            F.base64(
+                F.aes_encrypt(
+                    F.col(c), F.col("key").cast("binary"), F.lit(_MODE)
+                )
             ),
         )
+        if only_where is not None:
+            enc = F.when(only_where, enc).otherwise(F.col(c))
+        out = out.withColumn(c, enc)
     return out.drop("key")
 
 

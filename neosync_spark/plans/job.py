@@ -153,9 +153,11 @@ def compile_job(
         subject = job.encrypt_subject_col
         cols = tuple(job.encrypt_cols)
 
-        def df_transform(df):
+        def df_transform(df, only_where=None):
+            # keys are minted only for the rows being encrypted
+            minted = df if only_where is None else df.filter(only_where)
             return encrypt_columns(
-                df, store.ensure(df, subject), subject, cols
+                df, store.ensure(minted, subject), subject, cols, only_where
             )
 
     unknown_scopes = set(job.transform_where) - set(transforms)

@@ -107,8 +107,11 @@ def test_pipelined_mor_replay_matches_oracle(spark, tmp_path):
     patch_log.loc[partial, "op"] = "patch"
     patch_log.loc[partial, ["role", "tool"]] = None
 
-    def upper_text(df):
-        return df.withColumn("text", F.upper("text"))
+    def upper_text(df, only_where=None):
+        mapped = F.upper("text")
+        if only_where is not None:
+            mapped = F.when(only_where, mapped).otherwise(F.col("text"))
+        return df.withColumn("text", mapped)
 
     def replay(name, pdf, pipeline_batches, patch_ops):
         sdf = spark.createDataFrame(pdf)

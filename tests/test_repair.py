@@ -160,10 +160,11 @@ def test_repair_reapplies_transform(spark, tmp_path, log_path):
     """Anonymization is part of the stored state — repair re-applies
     the same per-row mapping the original merges did."""
 
-    def xform(df):
-        return df.withColumn(
-            "text", F.upper(F.coalesce(F.col("text"), F.lit("")))
-        )
+    def xform(df, only_where=None):
+        mapped = F.upper(F.coalesce(F.col("text"), F.lit("")))
+        if only_where is not None:
+            mapped = F.when(only_where, mapped).otherwise(F.col("text"))
+        return df.withColumn("text", mapped)
 
     t = SnapshotTable.create(
         spark,

@@ -250,6 +250,20 @@ class TestDeterminism:
         assert full.iloc[1] == solo.iloc[0]
 
 
+@pytest.mark.parametrize(
+    "name",
+    [n for n in X.REGISTRY if n.startswith("transform_") or n in ("null", "passthrough")],
+)
+def test_null_in_null_out(name):
+    """The NULL contract two engine paths rely on: a masked Python-UDF
+    transform (``ReplayEngine.transform_batch(only_where=...)``) feeds
+    NULL for rows it must not touch, and a ``patch_ops`` partial image
+    uses NULL for "unchanged" — so every column mapping must map NULL
+    to NULL without raising. (``generate_*`` fill NULLs by design.)"""
+    out = X.REGISTRY[name](seed=42)(v(None, None, None), k("a", "b", "c"))
+    assert len(out) == 3 and out.isna().all(), name
+
+
 class TestGenerators:
     def test_card_number_luhn(self):
         out = X.generate_card_number()(v(None, None), k("a", "b"))

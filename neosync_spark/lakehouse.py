@@ -79,9 +79,19 @@ SYNTHETIC_LSN_BASE = 1 << 62
 #: - arrow.pyspark.enabled: the pandas-UDF transformer stage falls
 #:   back to per-row pickle serialization (10-100x slower) when a
 #:   foreign session leaves Arrow off.
+#: - parallelPartitionDiscovery.threshold: ``spark.read.parquet(*paths)``
+#:   over more than 32 paths (Spark's default) runs a distributed
+#:   listing job just to stat files the manifest already names — every
+#:   read of more than 32 files (scans, COW target reads, the bloom
+#:   sidecar build, count and retention scans) paid it. Explicit file
+#:   paths on a 4-vCPU host, median of 5, default vs pinned:
+#:   16 files 51 vs 30 ms, 64 files 608 vs 48 ms, 256 files 1,419 vs
+#:   83 ms, 1,024 files 4,534 vs 228 ms. Pinned to 8192 = the 2^13
+#:   bucket count the scale notes target.
 _PINNED_SQL_CONFS = {
     "spark.sql.parquet.outputTimestampType": "TIMESTAMP_MICROS",
     "spark.sql.execution.arrow.pyspark.enabled": "true",
+    "spark.sql.sources.parallelPartitionDiscovery.threshold": "8192",
 }
 
 
@@ -189,6 +199,99 @@ def _mmh3_int(x: int, seed: int = 42) -> int:
     h = (h * 0xC2B2AE35) & m
     h ^= h >> 16
     return h - (1 << 32) if h >= (1 << 31) else h
+
+
+_M64 = (1 << 64) - 1
+_XP1 = 0x9E3779B185EBCA87
+_XP2 = 0xC2B2AE3D27D4EB4F
+_XP3 = 0x165667B19E3779F9
+_XP4 = 0x85EBCA77C2B2AE63
+_XP5 = 0x27D4EB2F165667C5
+
+
+def _rotl64(x: int, r: int) -> int:
+    return ((x << r) | (x >> (64 - r))) & _M64
+
+
+def _xxh64_round(acc: int, lane: int) -> int:
+    return _rotl64((acc + lane * _XP2) & _M64, 31) * _XP1 & _M64
+
+
+def _xxh64(data: bytes, seed: int = 42) -> int:
+    """XXH64 of ``data`` as a signed long — Spark's ``xxhash64`` (seed
+    42) over the bytes it hashes for one value. Re-derived from the
+    public XXH64 algorithm so ``_key_buckets`` can hash lookup keys on
+    the driver without a Spark job; ``test_plans.py`` pins it against
+    ``F.xxhash64``."""
+    n, i = len(data), 0
+    if n >= 32:
+        v = [
+            (seed + _XP1 + _XP2) & _M64,
+            (seed + _XP2) & _M64,
+            seed & _M64,
+            (seed - _XP1) & _M64,
+        ]
+        while i + 32 <= n:
+            for j in range(4):
+                lane = int.from_bytes(data[i : i + 8], "little")
+                v[j] = _xxh64_round(v[j], lane)
+                i += 8
+        h = (_rotl64(v[0], 1) + _rotl64(v[1], 7) + _rotl64(v[2], 12)
+             + _rotl64(v[3], 18)) & _M64
+        for acc in v:
+            h = ((h ^ _xxh64_round(0, acc)) * _XP1 + _XP4) & _M64
+    else:
+        h = (seed + _XP5) & _M64
+    h = (h + n) & _M64
+    while i + 8 <= n:
+        h ^= _xxh64_round(0, int.from_bytes(data[i : i + 8], "little"))
+        h = (_rotl64(h, 27) * _XP1 + _XP4) & _M64
+        i += 8
+    if i + 4 <= n:
+        h ^= int.from_bytes(data[i : i + 4], "little") * _XP1 & _M64
+        h = (_rotl64(h, 23) * _XP2 + _XP3) & _M64
+        i += 4
+    for b in data[i:]:
+        h = _rotl64(h ^ (b * _XP5 & _M64), 11) * _XP1 & _M64
+    h = (h ^ (h >> 33)) * _XP2 & _M64
+    h = (h ^ (h >> 29)) * _XP3 & _M64
+    h ^= h >> 32
+    return h - (1 << 64) if h >= (1 << 63) else h
+
+
+def _xxh64_input(v, dt: T.DataType) -> bytes | None:
+    """The bytes Spark's ``xxhash64`` reads for ``v`` as a ``dt``
+    literal: UTF-8 for a string, 4 / 8 little-endian bytes for an int /
+    long. None when only Spark can say (other types, NULL, values a
+    cast would change)."""
+    if isinstance(dt, T.StringType) and isinstance(v, str):
+        try:
+            return v.encode("utf-8")
+        except UnicodeEncodeError:  # lone surrogates
+            return None
+    if isinstance(v, int):
+        width = {T.IntegerType: 4, T.LongType: 8}.get(type(dt))
+        if width and -(1 << (8 * width - 1)) <= v < 1 << (8 * width - 1):
+            return v.to_bytes(width, "little", signed=True)
+    return None
+
+
+def _key_buckets(
+    spark: SparkSession, field: T.StructField, values, n_buckets: int
+) -> set[int]:
+    """The buckets ``bucket_expr`` puts ``values`` of key column
+    ``field`` in. String, int and long keys hash on the driver
+    (``_xxh64``; Python ``%`` by a positive modulus is ``pmod``); any
+    other key type, or a value Spark would have to cast, runs one tiny
+    local job through ``bucket_expr`` itself."""
+    data = [_xxh64_input(v, field.dataType) for v in values]
+    if all(d is not None for d in data):
+        return {_xxh64(d) % n_buckets for d in data}
+    vdf = literal_frame(spark, [(v,) for v in values], T.StructType([field]))
+    return {
+        int(r[0])
+        for r in vdf.select(bucket_expr(field.name, n_buckets)).collect()
+    }
 
 
 _ROUTE_PREIMAGES: dict[int, list[int]] = {}
@@ -973,25 +1076,23 @@ class SnapshotTable:
         absent (per-file sound in MoR for key columns — see
         ``_prune_by_bloom``). At 100 TB this turns "fetch one
         conversation" from a bucket scan over the whole delta chain
-        into opening ~one file."""
+        into opening ~one file.
+
+        Building the frame runs no Spark job: the manifest names every
+        file (``_PINNED_SQL_CONFS`` keeps their listing on the driver),
+        and string, int and long lookup keys hash to their buckets on
+        the driver (``_key_buckets``; other key types run one tiny
+        local job)."""
         m = self.manifest(snapshot_id)
         cur = self.current_schema(m)
         key_equals = self._norm_key_equals(key_equals)
         want = set(int(b) for b in buckets) if buckets is not None else None
         if key_equals and m["key_cols"][0] in key_equals and want is None:
-            # bucket pruning off the lookup values themselves: one tiny
-            # local job hashes the values exactly as bucket_expr does
+            # bucket pruning off the lookup values themselves
             kc = m["key_cols"][0]
-            vals = key_equals[kc]
-            vdf = literal_frame(
-                self.spark, [(v,) for v in vals], T.StructType([cur[kc]])
+            want = _key_buckets(
+                self.spark, cur[kc], key_equals[kc], m["bucket_count"]
             )
-            want = {
-                int(r[0])
-                for r in vdf.select(
-                    bucket_expr(kc, m["bucket_count"])
-                ).collect()
-            }
         vis_files, _, _ = self._prune_by_stats(m, stats_filter)
         vis_files, _, _ = self._prune_by_bloom(m, vis_files, key_equals)
 
@@ -2962,18 +3063,7 @@ class SnapshotTable:
         key_col = m["key_cols"][0]
         nb = m["bucket_count"]
         cur = self.current_schema(m)
-        key_type = cur[key_col].dataType
-        vals_df = literal_frame(
-            self.spark,
-            [(v,) for v in values],
-            T.StructType([T.StructField(key_col, key_type)]),
-        )
-        affected = sorted(
-            r[0]
-            for r in vals_df.select(bucket_expr(key_col, nb).alias("b"))
-            .distinct()
-            .collect()
-        )
+        affected = sorted(_key_buckets(self.spark, cur[key_col], values, nb))
         present = {int(b) for b in m["files"]}
         affected = [b for b in affected if b in present]
 
@@ -3512,6 +3602,26 @@ class SnapshotTable:
                 report["snapshot_ids"].append(ci.snapshot_id)
         return report
 
+    def _data_files(self):
+        """Every ``.parquet`` path under ``data/``, at any depth — the
+        one walk ``expire_snapshots`` and ``vacuum_orphans`` collect
+        from. Writers put files at ``data/<prefix>-<id>/_bucket=<k>/``;
+        older tables also hold ``expire_rows`` straddler rewrites one
+        level deeper (``data/retain-<id>/g<n>/_bucket=<k>/``). Stray
+        non-parquet entries, at any level, are skipped."""
+        for root, _dirs, files in os.walk(os.path.join(self.path, "data")):
+            for f in files:
+                if f.endswith(".parquet"):
+                    yield os.path.join(root, f)
+
+    @staticmethod
+    def _remove_data_file(p: str) -> None:
+        """Delete a GC'd data file, and its directory once empty."""
+        os.remove(p)
+        d = os.path.dirname(p)
+        if not os.listdir(d):
+            os.rmdir(d)
+
     def expire_snapshots(self, keep_last: int = 3) -> dict:
         """GC: drop manifests older than the last ``keep_last``
         snapshots and delete data files referenced by NO retained
@@ -3554,20 +3664,10 @@ class SnapshotTable:
                 )
 
         removed_files = 0
-        data_root = os.path.join(self.path, "data")
-        for commit in list(os.listdir(data_root)):
-            cdir = os.path.join(data_root, commit)
-            for bucket_dir in list(os.listdir(cdir)):
-                bdir = os.path.join(cdir, bucket_dir)
-                if not os.path.isdir(bdir):
-                    continue
-                for f in list(os.listdir(bdir)):
-                    p = os.path.join(bdir, f)
-                    if f.endswith(".parquet") and p not in keep_files:
-                        os.remove(p)
-                        removed_files += 1
-                if not os.listdir(bdir):
-                    os.rmdir(bdir)
+        for p in self._data_files():
+            if p not in keep_files:
+                self._remove_data_file(p)
+                removed_files += 1
 
         # bloom sidecars referenced by no retained snapshot: after a
         # purge this also erases the bits derived from the subjects'
@@ -3654,28 +3754,14 @@ class SnapshotTable:
 
         removed_files = 0
         kept_recent = 0
-        data_root = os.path.join(self.path, "data")
-        for commit in list(os.listdir(data_root)):
-            cdir = os.path.join(data_root, commit)
-            if not os.path.isdir(cdir):
+        for p in self._data_files():
+            if p in keep_files:
                 continue
-            for bucket_dir in list(os.listdir(cdir)):
-                bdir = os.path.join(cdir, bucket_dir)
-                if not os.path.isdir(bdir):
-                    continue
-                for f in list(os.listdir(bdir)):
-                    if not f.endswith(".parquet"):
-                        continue
-                    p = os.path.join(bdir, f)
-                    if p in keep_files:
-                        continue
-                    if os.path.getmtime(p) >= cutoff:
-                        kept_recent += 1
-                        continue
-                    os.remove(p)
-                    removed_files += 1
-                if not os.listdir(bdir):
-                    os.rmdir(bdir)
+            if os.path.getmtime(p) >= cutoff:
+                kept_recent += 1
+                continue
+            self._remove_data_file(p)
+            removed_files += 1
 
         removed_sidecars = 0
         bloom_root = os.path.join(self.path, "blooms")

@@ -54,37 +54,54 @@ def get_spark(
     if local_dir:
         os.makedirs(local_dir, exist_ok=True)
 
-    builder = (
-        SparkSession.builder.appName(app_name)
-        .master(master)
-        # every query's WholeStageCodegen classes live in the JVM code
-        # cache; a long-lived session (the bench sweeps 65+ queries, a
-        # tailing engine plans thousands of micro-batch commits) can
-        # exhaust the 240 MB default, at which point the JIT silently
-        # stops compiling and hot stages run interpreted. Reserve more
-        # and let the VM flush cold compiled code — standard hygiene
-        # for long-lived codegen-heavy Spark JVMs.
-        .config(
-            "spark.driver.extraJavaOptions",
-            "-XX:ReservedCodeCacheSize=512m -XX:+UseCodeCacheFlushing",
-        )
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.execution.arrow.maxRecordsPerBatch", "65536")
-        .config("spark.sql.parquet.compression.codec", "snappy")
+    builder = SparkSession.builder.appName(app_name).master(master)
+    for k, v in _engine_conf(shuffle_partitions, local_dir, extra_conf).items():
+        builder = builder.config(k, v)
+    spark = builder.getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    return spark
+
+
+# every query's WholeStageCodegen classes live in the JVM code cache; a
+# long-lived session (the bench sweeps 65+ queries, a tailing engine
+# plans thousands of micro-batch commits) can exhaust the 240 MB
+# default, at which point the JIT silently stops compiling and hot
+# stages run interpreted. Reserve more and let the VM flush cold
+# compiled code — standard hygiene for long-lived codegen-heavy Spark
+# JVMs. Set on the driver only: in local mode the executors run in the
+# driver JVM; a cluster deployment sets its executors' options itself.
+_CODE_CACHE_OPTS = "-XX:ReservedCodeCacheSize=512m -XX:+UseCodeCacheFlushing"
+_JAVA_OPTS = "spark.driver.extraJavaOptions"
+
+
+def _engine_conf(
+    shuffle_partitions: int,
+    local_dir: str | None,
+    extra_conf: dict[str, str] | None,
+) -> dict[str, str]:
+    """The session conf ``get_spark`` builds: engine defaults, then the
+    caller's ``extra_conf`` on top. A caller's driver JVM options are
+    appended to the code-cache flags rather than replacing them (the
+    JVM takes the last of a repeated flag, so the caller still wins)."""
+    conf = {
+        _JAVA_OPTS: _CODE_CACHE_OPTS,
+        "spark.sql.shuffle.partitions": str(shuffle_partitions),
+        "spark.sql.adaptive.enabled": "true",
+        "spark.sql.adaptive.coalescePartitions.enabled": "true",
+        "spark.sql.adaptive.skewJoin.enabled": "true",
+        "spark.sql.session.timeZone": "UTC",
+        "spark.sql.execution.arrow.pyspark.enabled": "true",
+        "spark.sql.execution.arrow.maxRecordsPerBatch": "65536",
+        "spark.sql.parquet.compression.codec": "snappy",
         # TIMESTAMP_MICROS (not the legacy INT96): footer min/max stats
         # exist, which the lakehouse zone-map pruning reads at commit
-        .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-        .config("spark.driver.memory", os.environ.get("NEOSYNC_SPARK_DRIVER_MEM", "48g"))
-        .config("spark.ui.enabled", "false")
-        .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
+        "spark.sql.parquet.outputTimestampType": "TIMESTAMP_MICROS",
+        "spark.driver.memory": os.environ.get("NEOSYNC_SPARK_DRIVER_MEM", "48g"),
+        "spark.ui.enabled": "false",
+        "spark.sql.autoBroadcastJoinThreshold": str(64 * 1024 * 1024),
         # commit algorithm v2: task-side renames — the v1 sequential
         # driver-side rename of every bucket dir dominates small commits
-        .config("spark.hadoop.mapreduce.fileoutputcommitter.algorithm.version", "2")
+        "spark.hadoop.mapreduce.fileoutputcommitter.algorithm.version": "2",
         # PySpark 4's DataFrame-debugging call-site capture costs three
         # py4j round-trips (conf.get + PySparkCurrentOrigin.set/clear)
         # plus a Python stack walk on EVERY DataFrame API call — pure
@@ -93,15 +110,12 @@ def get_spark(
         # expressions per commit, so this is a measurable fraction of
         # plan-building time at any cluster size (the driver is always
         # one process).
-        .config(
-            "spark.python.sql.dataFrameDebugging.enabled",
-            os.environ.get("NEOSYNC_SPARK_DF_DEBUG", "false"),
-        )
-    )
+        "spark.python.sql.dataFrameDebugging.enabled": os.environ.get(
+            "NEOSYNC_SPARK_DF_DEBUG", "false"
+        ),
+    }
     if local_dir:
-        builder = builder.config("spark.local.dir", local_dir)
+        conf["spark.local.dir"] = local_dir
     for k, v in (extra_conf or {}).items():
-        builder = builder.config(k, v)
-    spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    return spark
+        conf[k] = f"{_CODE_CACHE_OPTS} {v}" if k == _JAVA_OPTS else v
+    return conf

@@ -33,15 +33,18 @@ CUTOFF = datetime.datetime(1970, 1, 3)
 
 _TS_CONF = "spark.sql.parquet.outputTimestampType"
 _ARROW_CONF = "spark.sql.execution.arrow.pyspark.enabled"
+_LIST_CONF = "spark.sql.sources.parallelPartitionDiscovery.threshold"
 
 
 @pytest.fixture()
 def foreign_session(spark):
     """The shared session with Spark-default (hostile) conf values —
-    INT96 parquet timestamps, Arrow off — restored afterwards."""
-    saved = {k: spark.conf.get(k) for k in (_TS_CONF, _ARROW_CONF)}
+    INT96 parquet timestamps, Arrow off, a distributed listing job for
+    reads of more than 32 files — restored afterwards."""
+    saved = {k: spark.conf.get(k) for k in (_TS_CONF, _ARROW_CONF, _LIST_CONF)}
     spark.conf.set(_TS_CONF, "INT96")
     spark.conf.set(_ARROW_CONF, "false")
+    spark.conf.set(_LIST_CONF, "32")
     yield spark
     for k, v in saved.items():
         spark.conf.set(k, v)
@@ -73,6 +76,12 @@ class TestConfPinnedAtTableBoundary:
         _mk(foreign_session)
         assert foreign_session.conf.get(_TS_CONF) == "TIMESTAMP_MICROS"
         assert foreign_session.conf.get(_ARROW_CONF) == "true"
+        assert foreign_session.conf.get(_LIST_CONF) == "8192"
+
+    def test_pin_restores_driver_side_listing(self, foreign_session):
+        assert foreign_session.conf.get(_LIST_CONF) == "32"
+        pin_engine_confs(foreign_session)
+        assert foreign_session.conf.get(_LIST_CONF) == "8192"
 
     def test_load_restores_pinned_confs(self, foreign_session):
         t = _mk(foreign_session)  # create pins; re-break, then load

@@ -496,6 +496,109 @@ def test_mmh3_int_matches_spark_hash(spark):
     assert all(_mmh3_int(r.x) == r.h for r in rows)
 
 
+def test_key_buckets_match_spark_xxhash64(spark):
+    """read(key_equals=...) and purge_keys hash key values to buckets
+    on the driver; that must equal bucket_expr's pmod(xxhash64(v), n)
+    for every key type it hashes there — strings of every UTF-8 width
+    and of lengths around XXH64's 32-byte stripe, int32 and int64
+    extremes."""
+    import random
+
+    from pyspark.sql import functions as F
+    from pyspark.sql import types as T
+
+    from neosync_spark.lakehouse import _key_buckets, _xxh64, _xxh64_input
+
+    rnd = random.Random(7)
+    chars = ["a", "Z", "0", " ", "é", "ß", "日", "本", "😀", "𝄞"]  # 1-4 B
+    strings = [
+        "", "a", "conv-42", "é", "日本語", "😀",
+        "x" * 31, "x" * 32, "x" * 33, "é" * 16, "y" * 65, "😀" * 20,
+    ] + [
+        "".join(rnd.choice(chars) for _ in range(rnd.randint(0, 100)))
+        for _ in range(300)
+    ]
+    ints = [0, 1, -1, 42, 2**31 - 1, -(2**31)] + [
+        rnd.randint(-(2**31), 2**31 - 1) for _ in range(200)
+    ]
+    longs = [0, -1, 2**31, -(2**31) - 1, 2**63 - 1, -(2**63)] + [
+        rnd.randint(-(2**63), 2**63 - 1) for _ in range(200)
+    ]
+    mods = (7, 64, 8192)
+    for dt, vals in (
+        (T.StringType(), strings),
+        (T.IntegerType(), ints),
+        (T.LongType(), longs),
+    ):
+        field = T.StructField("k", dt)
+        rows = (
+            spark.createDataFrame([(v,) for v in vals], T.StructType([field]))
+            .select(
+                "k",
+                F.xxhash64("k").alias("h"),
+                *[F.pmod(F.xxhash64("k"), F.lit(n)).alias(f"b{n}") for n in mods],
+            )
+            .collect()
+        )
+        assert len(rows) == len(vals)
+        for r in rows:
+            assert _xxh64(_xxh64_input(r.k, dt)) == r.h, (dt, r.k)
+            for n in mods:
+                assert _key_buckets(spark, field, [r.k], n) == {r[f"b{n}"]}
+
+
+def _jobs_run(spark, fn):
+    """``fn()`` and the number of Spark jobs it ran."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"count-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_reads_plan_without_jobs(spark, tmp_path):
+    """Building a read runs no Spark job and a point lookup runs only its
+    scan: the manifest's file list (> 32 paths) must not start Spark's
+    distributed file listing, and the lookup key must hash to its
+    bucket on the driver."""
+    from pyspark.sql import functions as F
+
+    from neosync_spark.lakehouse import SnapshotTable
+    from neosync_spark.schema import KEY_COLS, transcript_schema
+
+    t = SnapshotTable.create(
+        spark, str(tmp_path / "t"), transcript_schema(), key_cols=KEY_COLS,
+        n_buckets=64,
+    )
+    batch = spark.range(1000).select(
+        F.concat(F.lit("c-"), F.col("id")).alias("conv_id"),
+        F.lit(0).alias("turn_idx"),
+        F.lit("user").alias("role"),
+        F.concat(F.lit("t-"), F.col("id")).alias("text"),
+        F.lit(None).cast("string").alias("tool"),
+        F.col("id").cast("timestamp").alias("ts"),
+        F.col("id").alias("lsn"),
+        F.lit("insert").alias("op"),
+    )
+    t.merge_cdc(batch, applied_range=(0, 1000), source_is_raw=True)
+    n_files = sum(len(v) for v in t.manifest(refresh=True)["files"].values())
+    assert n_files >= 64
+
+    _, jobs = _jobs_run(spark, t.read)
+    assert jobs == 0
+    rows, jobs = _jobs_run(
+        spark, lambda: t.read(key_equals={"conv_id": ["c-7"]}).collect()
+    )
+    assert [r.text for r in rows] == ["t-7"]
+    assert jobs == 1
+
+
 def test_bucket_routed_exact_one_bucket_per_partition(spark):
     """The write shuffle must route each bucket to its own partition:
     no multinomial collisions (2-4x straggler tasks), no empty write

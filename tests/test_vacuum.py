@@ -6,8 +6,10 @@ from __future__ import annotations
 
 import glob
 import os
+import shutil
 
 import pandas as pd
+import pytest
 
 from neosync_spark.lakehouse import SnapshotTable
 from neosync_spark.schema import KEY_COLS, transcript_schema
@@ -111,3 +113,35 @@ def test_vacuum_orphan_bloom_sidecar(spark, tmp_path):
     res = t.vacuum_orphans(grace_seconds=0)
     assert res["removed_bloom_sidecars"] == 1
     assert not os.path.exists(junk)
+
+
+@pytest.mark.parametrize("gc", ["expire_snapshots", "vacuum_orphans"])
+def test_gc_collects_any_depth_and_steps_over_strays(spark, tmp_path, gc):
+    """Both GC routines share one data-file walk: it reaches the old
+    three-level ``expire_rows`` straddler layout
+    (``data/retain-<id>/g<n>/_bucket=<k>/``) and skips a stray file
+    directly under ``data/``."""
+    path = tmp_path / "t"
+    t = _mk(spark, path)
+    t.merge_cdc(_batch(spark, [
+        (1, "insert", "c1", 0, "user", "a", None, "2024-01-01 00:00:01"),
+        (2, "insert", "c2", 0, "user", "b", None, "2024-01-01 00:00:02"),
+    ]), applied_range=(0, 10))
+    live = _all_parquet(path)
+    deep = path / "data" / "retain-0123456789ab" / "g0" / "_bucket=1"
+    deep.mkdir(parents=True)
+    debris = deep / "part-00000-retained.parquet"
+    shutil.copy(sorted(live)[0], debris)
+    stray = path / "data" / "notes.txt"
+    stray.write_text("not table data")
+
+    if gc == "expire_snapshots":
+        res = t.expire_snapshots(keep_last=10)
+    else:
+        res = t.vacuum_orphans(grace_seconds=0)
+
+    assert res["removed_files"] == 1
+    assert not debris.exists() and not deep.exists()
+    assert stray.exists()
+    assert _all_parquet(path) == live
+    assert t.read().count() == 2

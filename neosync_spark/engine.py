@@ -21,6 +21,7 @@ from __future__ import annotations
 
 import threading
 from dataclasses import dataclass, field
+from functools import partial
 from typing import Callable
 
 import pandas as pd
@@ -326,11 +327,14 @@ class ReplayEngine:
         return out
 
     def apply_batch(
-        self, batch: DataFrame, applied_range: tuple[int, int]
+        self, batch: DataFrame, applied_range: tuple[int, int],
+        _src_buckets=None,
     ) -> CommitInfo:
         """Fast path: hand the RAW slice to the merge — in-batch dedup
         folds into the merge's single LWW shuffle and the anonymizers
-        run inside it, on winning source rows only."""
+        run inside it, on winning source rows only. ``_src_buckets`` is
+        ``merge_cdc``'s, counting ``batch`` as given; it is dropped when
+        quarantine or ``fk_check`` filter the batch."""
         obs = None
         original = batch
         valid = None
@@ -422,6 +426,8 @@ class ReplayEngine:
             patch_ops=self.config.patch_ops,
             bucket_local_merge=self.config.bucket_local_merge,
             on_conflict=self.config.on_conflict,
+            # counts of the slice as given: quarantine and fk_check filter it
+            _src_buckets=_src_buckets if batch is original else None,
         )
         if chaining:
             prev = self._chained_state
@@ -521,7 +527,9 @@ class ReplayEngine:
                 lsn_lo = bounds[0] if lsn_lo is None else lsn_lo
                 lsn_hi = bounds[1] if lsn_hi is None else lsn_hi
             slicer = source.slice
+            counts = getattr(source, "bucket_counts", None)
         else:
+            counts = None
             assert lsn_lo is not None and lsn_hi is not None
             slicer = source
 
@@ -549,7 +557,10 @@ class ReplayEngine:
                 stats.batches_skipped += 1
                 continue
             self._ensure_declared_schema(hi - 1, stats)
-            info = self.apply_batch(slicer(lo, hi), (lo, hi))
+            info = self.apply_batch(
+                slicer(lo, hi), (lo, hi),
+                partial(counts, lo, hi) if counts else None,
+            )
             stats.batches_applied += 1
             stats.rows_applied += info.rows_written
             stats.rows_skipped_fk += self._last_fk_skipped

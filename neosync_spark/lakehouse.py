@@ -1713,6 +1713,7 @@ class SnapshotTable:
         bucket_local_merge: bool = False,
         on_conflict: str = "fail",
         _retry_budget: int = 2,
+        _src_buckets=None,
     ) -> CommitInfo:
         """Apply a key-unique CDC batch (cols: op + payload + ts + lsn).
 
@@ -1796,6 +1797,15 @@ class SnapshotTable:
         (False) the caller provides a key-unique, already-transformed
         batch, which COW persists to avoid recomputing it twice.
 
+        With ``prune_buckets`` (the default) a COW merge first needs the
+        batch's rows per bucket: they pick the buckets to rewrite and
+        give the lineage rows and ``source_rows``. The private
+        ``_src_buckets(key, n)`` may supply them from the batch's source
+        on the driver (``ReplayEngine.replay`` passes
+        ``ChangeLogSource.bucket_counts`` for an unmodified slice); when
+        it is absent or returns None, one ``groupBy(bucket).count()``
+        job over the batch counts them.
+
         ``on_conflict`` governs concurrent writers (the Iceberg
         optimistic-concurrency model): ``'fail'`` (default) raises
         CommitConflictError; ``'rebase'`` re-expresses the commit
@@ -1862,13 +1872,18 @@ class SnapshotTable:
         observation = None
         try:
             if prune_buckets:
-                # ONE action yields affected buckets + row counts
-                # (lineage) + total. On the raw path this is a plain
-                # scan + tiny agg (no UDFs have been attached yet).
-                bucket_counts = {
-                    int(r[0]): int(r[1])
-                    for r in src.groupBy(_BUCKET_COL).count().collect()
-                }
+                # affected buckets + row counts (lineage) + total: from
+                # the source on the driver when it can count the batch,
+                # else ONE action — on the raw path a plain scan + tiny
+                # agg (no UDFs have been attached yet)
+                bucket_counts = (
+                    _src_buckets(key_cols[0], nb) if _src_buckets else None
+                )
+                if bucket_counts is None:
+                    bucket_counts = {
+                        int(r[0]): int(r[1])
+                        for r in src.groupBy(_BUCKET_COL).count().collect()
+                    }
                 affected = sorted(bucket_counts)
                 n_src = sum(bucket_counts.values())
             else:
@@ -2016,6 +2031,7 @@ class SnapshotTable:
                     bucket_local_merge=bucket_local_merge,
                     on_conflict="retry",
                     _retry_budget=_retry_budget - 1,
+                    _src_buckets=_src_buckets,
                 )
             rebased = committed["snapshot_id"] != new_sid
             if chain_state and (noop or rebased):

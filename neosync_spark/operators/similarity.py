@@ -108,19 +108,6 @@ def ngram_jaccard(a: Column, b: Column) -> Column:
 
 # --------------------------------------------------------------- minhash
 
-def minhash_signature(shingles: Column, num_hashes: int = 64, seed: int = 42) -> Column:
-    """k-minhash signature as a single Column expression. NOTE: nested
-    higher-order functions are interpreted (not codegen'd) — use
-    minhash_signatures() (explode + hash-agg) for anything beyond a few
-    thousand docs; kept for expression-level composition."""
-    return F.transform(
-        F.sequence(F.lit(0), F.lit(num_hashes - 1)),
-        lambda j: F.array_min(
-            F.transform(shingles, lambda s: F.xxhash64(s, j + F.lit(seed)))
-        ),
-    )
-
-
 _MERSENNE_31 = 2_147_483_647  # 2^31 - 1, prime
 
 

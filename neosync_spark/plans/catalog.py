@@ -115,15 +115,6 @@ class Catalog:
         path, sid = self.pinned(name)
         return SnapshotTable.load(spark, path).read(snapshot_id=sid)
 
-    def read_all(self, spark: SparkSession) -> dict[str, DataFrame]:
-        doc = self._read()
-        out = {}
-        for name, e in doc["tables"].items():
-            out[name] = SnapshotTable.load(spark, e["path"]).read(
-                snapshot_id=int(e["snapshot_id"])
-            )
-        return out
-
     # ---------- atomic publish ----------
 
     def publish(

@@ -74,15 +74,50 @@ _CODE_CACHE_OPTS = "-XX:ReservedCodeCacheSize=512m -XX:+UseCodeCacheFlushing"
 _JAVA_OPTS = "spark.driver.extraJavaOptions"
 
 
+def _host_memory_bytes(
+    meminfo: str = "/proc/meminfo", cgroup: str = "/sys/fs/cgroup/memory.max"
+) -> int | None:
+    """The smaller of ``MemTotal`` and the cgroup v2 ``memory.max``
+    (``max`` means no limit); None when neither can be read."""
+    found = []
+    try:
+        with open(meminfo) as f:
+            found += [int(ln.split()[1]) * 1024 for ln in f if ln.startswith("MemTotal:")]
+    except (OSError, ValueError, IndexError):
+        pass
+    try:
+        with open(cgroup) as f:
+            found.append(int(f.read().strip()))
+    except (OSError, ValueError):  # missing, or "max"
+        pass
+    return min(found) if found else None
+
+
+def _default_driver_memory(host_bytes: int | None) -> str:
+    """Half of the memory the process may use, capped at 48g (48g when
+    it cannot be read). In local mode the executors run in the driver
+    JVM, and the other half is for what the heap does not hold: the
+    JVM's off-heap memory (512m code cache, metaspace, thread stacks,
+    Arrow and netty buffers) and the Python driver and workers. A heap
+    above physical memory is never right: G1 grows the heap instead of
+    collecting, and the kernel kills the JVM (a 15 GB host lost its test
+    JVM at 15.5 GB resident under the old fixed 48g)."""
+    if host_bytes is None:
+        return "48g"
+    return f"{min(host_bytes // 2 // 2**20, 48 * 1024)}m"
+
+
 def _engine_conf(
     shuffle_partitions: int,
     local_dir: str | None,
     extra_conf: dict[str, str] | None,
 ) -> dict[str, str]:
     """The session conf ``get_spark`` builds: engine defaults, then the
-    caller's ``extra_conf`` on top. A caller's driver JVM options are
-    appended to the code-cache flags rather than replacing them (the
-    JVM takes the last of a repeated flag, so the caller still wins)."""
+    caller's ``extra_conf`` on top. ``NEOSYNC_SPARK_DRIVER_MEM``
+    overrides the driver heap ``_default_driver_memory`` sizes. A
+    caller's driver JVM options are appended to the code-cache flags
+    rather than replacing them (the JVM takes the last of a repeated
+    flag, so the caller still wins)."""
     conf = {
         _JAVA_OPTS: _CODE_CACHE_OPTS,
         "spark.sql.shuffle.partitions": str(shuffle_partitions),
@@ -96,7 +131,8 @@ def _engine_conf(
         # TIMESTAMP_MICROS (not the legacy INT96): footer min/max stats
         # exist, which the lakehouse zone-map pruning reads at commit
         "spark.sql.parquet.outputTimestampType": "TIMESTAMP_MICROS",
-        "spark.driver.memory": os.environ.get("NEOSYNC_SPARK_DRIVER_MEM", "48g"),
+        "spark.driver.memory": os.environ.get("NEOSYNC_SPARK_DRIVER_MEM")
+        or _default_driver_memory(_host_memory_bytes()),
         "spark.ui.enabled": "false",
         "spark.sql.autoBroadcastJoinThreshold": str(64 * 1024 * 1024),
         # commit algorithm v2: task-side renames — the v1 sequential

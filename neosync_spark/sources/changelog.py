@@ -7,12 +7,99 @@ with a partitioned columnar scan: the lsn range predicate is pushed
 down to the parquet scan (verify: PushedFilters in .explain), and
 ordering is NOT materialized — the LWW aggregation downstream consumes
 events order-free, so no global sort is ever paid.
+
+Small slices are planned on the driver, from what the source already
+holds: the directory listing and the segments' parquet footers (F1
+Query's split: small work on one node, large work on the cluster).
+
+- ``full()`` reads with the schema Spark inferred for the same listing
+  (name, size and ``mtime_ns`` of every file Spark would read). Spark
+  infers from one file of the listing, so the same files give the same
+  schema; any change to the listing infers again.
+- ``bucket_counts`` counts a slice's rows per table bucket with pyarrow,
+  reading only the key and ``lsn`` columns of the row groups whose
+  ``lsn`` stats overlap the slice, and hashes the keys like
+  ``bucket_expr`` (``lakehouse._xxh64``).
+- ``lsn_bounds`` takes the log's bounds from the row-group ``lsn`` stats.
+
+Each falls back to today's Spark call or job when the driver cannot
+answer exactly: a path that is not a plain local directory of files (a
+subdirectory means partition discovery, ``_metadata`` /
+``_common_metadata`` summaries change which file Spark infers from),
+a key type other than string, int or long or one a segment stores
+differently, a row group without ``lsn`` stats (``lsn_bounds`` only),
+or more than ``_DRIVER_SLICE_ROWS`` rows to read.
 """
 
 from __future__ import annotations
 
+import os
+
+import pyarrow as pa
+import pyarrow.compute as pc
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
+
+from ..lakehouse import _xxh64, _xxh64_input
+
+# Rows in the overlapping row groups above which bucket_counts leaves a
+# slice to the Spark pre-pass job. The driver pays ~0.1 ms per 1000
+# rows read plus ~6.5 µs per distinct key hashed; the job costs about
+# the same at any size. Measured on 4 vCPUs (warm JVM, 64 buckets,
+# 11-byte string keys, 32768-row segments of one row group each,
+# median of 5): the groupBy job took 120-245 ms for slices of 2k-600k
+# rows. Reading 65536 rows took the driver 6 ms with 16 distinct keys
+# (job 123 ms), and 200 ms when all 32768 slice rows had distinct keys
+# (job 178 ms); 98304 rows of 65536 distinct keys took 429 ms (job
+# 170 ms). At 65536 rows the driver is at worst at par with the job.
+_DRIVER_SLICE_ROWS = 65_536
+
+# Spark key type -> the Arrow types a segment may store it as. Looked
+# up by ==, so a collated string (hashed by its collation key) is not
+# found.
+_DRIVER_KEYS = {
+    T.StringType(): (pa.string(), pa.large_string()),
+    T.IntegerType(): (pa.int32(),),
+    T.LongType(): (pa.int64(),),
+}
+
+
+def _spark_hidden(name: str) -> bool:
+    """Whether Spark's file listing skips ``name``
+    (``InMemoryFileIndex.shouldFilterOutPathName``): a ``_`` prefix
+    without ``=``, a ``.`` prefix or a ``._COPYING_`` suffix, except the
+    ``_metadata`` / ``_common_metadata`` summaries."""
+    exclude = (
+        (name.startswith("_") and "=" not in name)
+        or name.startswith(".")
+        or name.endswith("._COPYING_")
+    )
+    return exclude and not name.startswith(("_common_metadata", "_metadata"))
+
+
+def _footer_row_groups(path: str):
+    """Per row group of ``path``: ``(lsn min, lsn max, rows)``, the
+    bounds None without integer stats; None when the file has no
+    top-level ``lsn`` column or pyarrow cannot read the footer."""
+    try:
+        md = pq.read_metadata(path)
+    except (OSError, pa.ArrowException):
+        return None
+    cols = [md.schema.column(i).path for i in range(md.num_columns)]
+    if "lsn" not in cols:
+        return None
+    c = cols.index("lsn")
+    out = []
+    for r in range(md.num_row_groups):
+        rg = md.row_group(r)
+        st = rg.column(c).statistics
+        if st is not None and st.has_min_max and type(st.min) is int:
+            out.append((st.min, st.max, rg.num_rows))
+        else:
+            out.append((None, None, rg.num_rows))
+    return tuple(out)
 
 
 class ChangeLogSource:
@@ -21,9 +108,50 @@ class ChangeLogSource:
     def __init__(self, spark: SparkSession, path: str):
         self.spark = spark
         self.path = path
+        self._schema: tuple[tuple, T.StructType] | None = None
+        self._footers: dict[tuple, tuple | None] = {}
+
+    def _listing(self) -> tuple[tuple[str, int, int], ...] | None:
+        """(name, size, mtime_ns) of every file Spark would read, sorted;
+        None when Spark's listing would do more than read a flat
+        directory of files (see the module docstring)."""
+        if any(c in self.path for c in "{}[]*?\\"):  # Spark globs these
+            return None
+        try:
+            entries = list(os.scandir(self.path))
+        except OSError:  # a file, a URI, a missing path
+            return None
+        out = []
+        for e in entries:
+            if _spark_hidden(e.name):
+                continue
+            if e.name.startswith(("_common_metadata", "_metadata")) or not e.is_file():
+                return None
+            st = e.stat()
+            out.append((e.name, st.st_size, st.st_mtime_ns))
+        return tuple(sorted(out)) or None
+
+    def _schema_of(self, listing) -> T.StructType:
+        if self._schema is None or self._schema[0] != listing:
+            self._schema = (listing, self.spark.read.parquet(self.path).schema)
+        return self._schema[1]
+
+    def _row_groups(self, listing) -> list[tuple[str, tuple | None]]:
+        """(path, ``_footer_row_groups``) per listed file; the summaries
+        are cached by (name, size, mtime_ns) and dropped once their file
+        leaves the listing."""
+        self._footers = {
+            f: self._footers[f] if f in self._footers
+            else _footer_row_groups(os.path.join(self.path, f[0]))
+            for f in listing
+        }
+        return [(os.path.join(self.path, f[0]), self._footers[f]) for f in listing]
 
     def full(self) -> DataFrame:
-        return self.spark.read.parquet(self.path)
+        listing = self._listing()
+        if listing is None:
+            return self.spark.read.parquet(self.path)
+        return self.spark.read.schema(self._schema_of(listing)).parquet(self.path)
 
     def slice(self, lsn_lo: int, lsn_hi: int) -> DataFrame:
         """Events with lsn in [lsn_lo, lsn_hi) — predicate pushed to the
@@ -33,7 +161,69 @@ class ChangeLogSource:
             (F.col("lsn") >= F.lit(lsn_lo)) & (F.col("lsn") < F.lit(lsn_hi))
         )
 
+    def bucket_counts(
+        self, lsn_lo: int, lsn_hi: int, key: str, n_buckets: int
+    ) -> dict[int, int] | None:
+        """Rows of ``slice(lsn_lo, lsn_hi)`` per ``bucket_expr(key,
+        n_buckets)`` bucket, counted on the driver; None when only the
+        Spark job can say (see the module docstring)."""
+        listing = self._listing()
+        if listing is None:
+            return None
+        dt = next(
+            (f.dataType for f in self._schema_of(listing).fields if f.name == key),
+            None,
+        )
+        if dt not in _DRIVER_KEYS:
+            return None
+        picks, rows = [], 0
+        for path, rgs in self._row_groups(listing):
+            if rgs is None:
+                return None
+            idx = [
+                i for i, (lo, hi, _) in enumerate(rgs)
+                if lo is None or (lo < lsn_hi and hi >= lsn_lo)
+            ]
+            rows += sum(rgs[i][2] for i in idx)
+            if rows > _DRIVER_SLICE_ROWS:
+                return None
+            if idx:
+                picks.append((path, idx))
+        keys = []
+        for path, idx in picks:
+            f = pq.ParquetFile(path)
+            types = dict(zip(f.schema_arrow.names, f.schema_arrow.types))
+            if types.get(key) not in _DRIVER_KEYS[dt]:
+                return None
+            if not pa.types.is_signed_integer(types["lsn"]):
+                return None
+            t = f.read_row_groups(idx, columns=[key, "lsn"])
+            lsn = t.column("lsn").cast(pa.int64())
+            keep = pc.and_(pc.greater_equal(lsn, lsn_lo), pc.less(lsn, lsn_hi))
+            k = t.column(key).filter(keep)
+            # a string as the raw UTF-8 bytes Spark hashes
+            keys += (k if dt != T.StringType() else k.cast(pa.large_binary())).chunks
+        out: dict[int, int] = {}
+        for r in pc.value_counts(pa.chunked_array(keys)).to_pylist() if keys else ():
+            v = r["values"]
+            if v is None:
+                b = 42  # xxhash64(NULL) is the seed
+            else:
+                b = _xxh64(v if isinstance(v, bytes) else _xxh64_input(v, dt))
+            out[b % n_buckets] = out.get(b % n_buckets, 0) + r["counts"]
+        return out
+
     def lsn_bounds(self) -> tuple[int, int] | None:
+        """(min, max) lsn of the log, or None when it holds none: from
+        the row-group stats when every non-empty row group of every
+        segment has them, else one aggregate job."""
+        listing = self._listing()
+        footers = [rgs for _, rgs in self._row_groups(listing)] if listing else [None]
+        groups = [g for rgs in footers if rgs is not None for g in rgs if g[2]]
+        if None not in footers and all(g[0] is not None for g in groups):
+            if not groups:
+                return None
+            return min(g[0] for g in groups), max(g[1] for g in groups)
         row = self.full().agg(
             F.min("lsn").alias("lo"), F.max("lsn").alias("hi")
         ).collect()[0]

@@ -103,16 +103,3 @@ class ShardedLogSource:
         return {
             s: (watermark - 1 - s) // self.n for s in range(self.n)
         }
-
-    @staticmethod
-    def stamp_virtual_lsn(
-        df: DataFrame, n_shards: int, shard_col: str = "shard",
-        seq_col: str = "seq",
-    ) -> DataFrame:
-        """Stamp the flattening onto an already-loaded frame (for
-        feeds arriving through readStream / non-parquet carriers)."""
-        return df.withColumn(
-            "lsn",
-            F.col(seq_col).cast("long") * n_shards
-            + F.col(shard_col).cast("long"),
-        )

@@ -60,12 +60,6 @@ def round_half_up(col, scale: int = 4):
     return F.floor(col * m + F.lit(0.5)) / m
 
 
-def sql_round_half_up(expr: str, scale: int = 4) -> str:
-    """The same rounding as ANSI SQL text (for DuckDB oracles)."""
-    m = 10**scale
-    return f"floor(({expr}) * {m} + 0.5) / {m}"
-
-
 def str_seed(s: str) -> int:
     """Deterministic uint64 seed from a python string (label hashing)."""
     h = np.uint64(0xCBF29CE484222325)

@@ -599,6 +599,44 @@ def test_reads_plan_without_jobs(spark, tmp_path):
     assert jobs == 1
 
 
+@pytest.mark.parametrize("quarantine, want_jobs", [(False, 3), (True, 5)])
+def test_keylocal_replay_commit_jobs(spark, tmp_path, quarantine, want_jobs):
+    """A replay commit of a plain log slice runs only the 3 write jobs:
+    the log schema comes from the listing-keyed cache and the bucket
+    pre-pass is counted from the segment footers on the driver (6 jobs
+    before: + 1 schema inference + 2 pre-pass). A quarantined batch is
+    filtered before the merge, so it keeps the 2 pre-pass jobs."""
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from neosync_spark.engine import EngineConfig, ReplayEngine
+    from neosync_spark.lakehouse import SnapshotTable
+    from neosync_spark.schema import KEY_COLS, transcript_schema
+
+    log = str(tmp_path / "log")
+    os.makedirs(log)
+    events = pa.Table.from_pandas(
+        generate_pandas(SynthConfig(n_events=3000, n_convs=200)),
+        preserve_index=False,
+    )
+    for lo in range(0, 3000, 1000):
+        pq.write_table(events.slice(lo, 1000), os.path.join(log, f"seg-{lo:05d}.parquet"))
+    t = SnapshotTable.create(
+        spark, str(tmp_path / "t"), transcript_schema(), key_cols=KEY_COLS,
+        n_buckets=64,
+    )
+    eng = ReplayEngine(
+        spark, t, config=EngineConfig(batch_lsn_size=1000, quarantine=quarantine)
+    )
+    src = ChangeLogSource(spark, log)
+    eng.replay(src, lsn_lo=0, lsn_hi=1999)
+    stats, jobs = _jobs_run(spark, lambda: eng.replay(src, lsn_lo=2000, lsn_hi=2999))
+    assert stats.batches_applied == 1
+    assert jobs == want_jobs
+
+
 def test_bucket_routed_exact_one_bucket_per_partition(spark):
     """The write shuffle must route each bucket to its own partition:
     no multinomial collisions (2-4x straggler tasks), no empty write
